@@ -12,33 +12,25 @@ object Bench {
 
   final case class Result(
       times: Seq[(String, Double)], errors: Seq[(String, String)],
-      maxTimes: Seq[(String, Double)] = Nil,
-      touched: Set[String] = Set.empty) {
+      maxTimes: Seq[(String, Double)] = Nil) {
     def totalSec: Double = times.collect { case (_, t) if t >= 0 => t }.sum
 
-    /** `cold` (round 17): the cache-cleared re-timing pass, reported as
-      * ADDED `"<name>__cold"` entries in "queries"/"spread" — "value"
-      * stays this (warm) result's total, the round-over-round
-      * comparable; existing query keys are never removed or renamed.
-      */
-    def json(sfDir: String, cold: Option[Result] = None): String = {
-      val allTimes = times ++ cold.toSeq.flatMap(_.times)
-      val allErrors = errors ++ cold.toSeq.flatMap(_.errors)
-      val qs = allTimes.map { case (k, v) => s"\"$k\":$v" }
+    def json(sfDir: String): String = {
+      val qs = times.map { case (k, v) => s"\"$k\":$v" }
         .mkString("{", ",", "}")
       // per-query min/max spread: "queries" stays the min-of-N estimate
       // (one-sided noise), and a wide max/min ratio marks the sample —
       // not the query — as contended, so a poisoned run self-identifies
-      val mx = maxTimes.toMap ++ cold.toSeq.flatMap(_.maxTimes)
-      val spread = allTimes.collect { case (k, v) if v >= 0 && mx.contains(k) =>
+      val mx = maxTimes.toMap
+      val spread = times.collect { case (k, v) if v >= 0 && mx.contains(k) =>
         s"""\"$k\":{"min":$v,"max":${mx(k)}}"""
       }.mkString("{", ",", "}")
-      val errs = allErrors.map { case (k, m) =>
+      val errs = errors.map { case (k, m) =>
         s"\"$k\":\"${m.replace("\\", "\\\\").replace("\"", "\\\"")}\""
       }.mkString("{", ",", "}")
       s"""{"metric":"total","value":$totalSec,"unit":"sec","queries":$qs,""" +
         s""""spread":$spread,""" +
-        s""""failures":${allErrors.length},"errors":$errs,"sf":"$sfDir"}"""
+        s""""failures":${errors.length},"errors":$errs,"sf":"$sfDir"}"""
     }
 
     /** Compact single-line summary that fits the driver's 2000-char output
@@ -50,8 +42,9 @@ object Bench {
       * per-query sample; the full-precision full list is json() and the
       * bench_full.json artifact).
       */
-    def compactJson(sfDir: String, cold: Option[Result] = None): String = {
-      def ms(v: Double): String = "%.3f".format(v)
+    def compactJson(sfDir: String): String = {
+      // Locale.ROOT: a comma-decimal default locale would write 1,234
+      def ms(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
       def top(ts: Seq[(String, Double)], budget: Int): String = {
         val b = new StringBuilder
         var n = 0
@@ -65,13 +58,9 @@ object Bench {
       }
       // tail window is 2000 chars and sbt's [success] line follows; keep
       // the whole line comfortably under that
-      val coldPart = cold.map(c =>
-        s""""queries_cold":{${top(c.times, 300)}},""").getOrElse("")
-      val failures = errors.length + cold.map(_.errors.length).getOrElse(0)
       s"""{"metric":"total","value":$totalSec,"unit":"sec",""" +
         s""""nqueries":${times.length},"queries":{${top(times, 1200)}},""" +
-        coldPart +
-        s""""failures":$failures,"sf":"$sfDir"}"""
+        s""""failures":${errors.length},"sf":"$sfDir"}"""
     }
   }
 
@@ -90,7 +79,6 @@ object Bench {
       spark: SparkSession, sfDir: String,
       queries: Seq[(String, (SparkSession, String) => DataFrame)],
       repeats: Int = 2): Result = {
-    val touched = scala.collection.mutable.Set.empty[String]
     val outcomes = queries.map { case (name, fn) =>
       var best = Double.MaxValue
       var worst = 0.0
@@ -100,17 +88,12 @@ object Bench {
       // land in the timed min/max and poison round-over-round deltas
       // (r7: kql_mvexpand_idx spread 1.45–4.99 s — pure warmup). A
       // warmup failure is the query's failure; timed repeats are skipped.
-      // The warmup doubles as the memo-gate probe: a query that consults
-      // the session gate cache is marked for the cold re-timing pass.
-      graft.queries.PipelineQueries.resetGateCacheProbe()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch {
         case e: Throwable =>
           err = Some(Option(e.getMessage).getOrElse(e.getClass.getName)
             .trim.replace("\n", " ").take(300))
       }
-      if (graft.queries.PipelineQueries.gateCacheWasTouched)
-        touched += name
       var i = 0
       while (i < repeats && err.isEmpty) {
         val t0 = System.nanoTime()
@@ -134,8 +117,7 @@ object Bench {
     Result(
       outcomes.map { case (n, t, _, _) => n -> t },
       outcomes.collect { case (n, _, _, Some(m)) => n -> m },
-      outcomes.map { case (n, _, w, _) => n -> w },
-      touched.toSet)
+      outcomes.map { case (n, _, w, _) => n -> w })
   }
 
   def main(args: Array[String]): Unit = {
@@ -163,26 +145,7 @@ object Bench {
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     val result = run(spark, sfDir, selected, repeats)
-    // COLD re-timing pass (round 17): queries whose build consulted the
-    // session gate-model cache have warm times that amortize shared
-    // training into whichever gate ran first, so they are re-timed with
-    // the caches CLEARED before every execution (warmup and each timed
-    // repeat) — those numbers measure the declared computation, training
-    // included. Reported as added "<name>__cold" entries; "value" stays
-    // the warm total. SPARK_GRAFT_BENCH_COLD=0 skips the pass.
-    val coldMode = sys.env.getOrElse("SPARK_GRAFT_BENCH_COLD", "1") != "0"
-    val cold: Option[Result] =
-      if (coldMode && result.touched.nonEmpty) {
-        val coldQs = selected.collect {
-          case (n, fn) if result.touched(n) =>
-            (n + "__cold", (s: SparkSession, d: String) => {
-              graft.queries.PipelineQueries.clearGateCaches(s)
-              fn(s, d)
-            })
-        }
-        Some(run(spark, sfDir, coldQs, repeats))
-      } else None
-    val full = result.json(sfDir, cold)
+    val full = result.json(sfDir)
     // full per-query JSON as a file artifact (the stdout line exceeds the
     // driver's tail window), then the full line, then — LAST, so a tail
     // capture always holds it whole — the compact machine-readable summary
@@ -190,8 +153,8 @@ object Bench {
       java.nio.file.Paths.get("bench_full.json"), full + "\n")
     catch { case _: Throwable => () }
     println(full)
-    println(result.compactJson(sfDir, cold))
+    println(result.compactJson(sfDir))
     spark.stop()
-    if (result.errors.nonEmpty || cold.exists(_.errors.nonEmpty)) sys.exit(1)
+    if (result.errors.nonEmpty) sys.exit(1)
   }
 }

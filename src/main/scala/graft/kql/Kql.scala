@@ -22,21 +22,15 @@ object Kql {
     * should compile via [[Compiler]] directly and call
     * `releaseMaterialized()` after consuming results, as QueryServer
     * does. MEMORY_AND_DISK storage evicts under pressure either way. */
-  def run(spark: SparkSession, catalog: Catalog, kql: String): DataFrame = {
-    val parsed = parse(kql)
-    val compiler = new Compiler(spark, catalog, parsed.lets,
-      materializedLets = parsed.materialized)
-    val df = compiler.compile(parsed.query)
-    compiler.runWrites() // write/tee sinks flush on run, never on explain
-    df
-  }
+  def run(spark: SparkSession, catalog: Catalog, kql: String): DataFrame =
+    run(spark, catalog, kql, System.currentTimeMillis() * 1000L)
 
   def run(spark: SparkSession, catalog: Catalog, kql: String, nowMicros: Long): DataFrame = {
     val parsed = parse(kql, nowMicros)
     val compiler = new Compiler(spark, catalog, parsed.lets,
       materializedLets = parsed.materialized)
     val df = compiler.compile(parsed.query)
-    compiler.runWrites()
+    compiler.runWrites() // write/tee sinks flush on run, never on explain
     df
   }
 

@@ -61,6 +61,14 @@ final class QueryServer(
 
   def boundPort: Int = server.getAddress.getPort
 
+  // handler threads carry the port in their names, so a leak is visible
+  // in a thread dump; stop() shuts the pool down
+  private val handlerPool = {
+    val n = new AtomicLong(0L)
+    java.util.concurrent.Executors.newFixedThreadPool(4, (r: Runnable) =>
+      new Thread(r, s"graft-query-server-$boundPort-handler-${n.incrementAndGet()}"))
+  }
+
   def start(): this.type = {
     server.createContext("/query", (ex: HttpExchange) => handle(ex, handleQuery))
     server.createContext("/explain", (ex: HttpExchange) => handle(ex, handleExplain))
@@ -71,7 +79,7 @@ final class QueryServer(
         metrics.render + s"graft_rows_nulled_total ${rowsNulled.value}\n")))
     server.createContext("/health", (ex: HttpExchange) =>
       handle(ex, e => respond(e, 200, "ok")))
-    server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+    server.setExecutor(handlerPool)
     spark.listenerManager.register(metrics)
     server.start()
     this
@@ -80,6 +88,8 @@ final class QueryServer(
   def stop(): Unit = {
     spark.listenerManager.unregister(metrics)
     server.stop(0)
+    handlerPool.shutdown()
+    handlerPool.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS)
   }
 
   private def handle(ex: HttpExchange, fn: HttpExchange => Unit): Unit =

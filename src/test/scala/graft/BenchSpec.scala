@@ -41,4 +41,15 @@ class BenchSpec extends AnyFunSuite {
       "broken" -> ((_, _) => throw new RuntimeException("boom"))))
     assert(!bad.json("sf").contains(""""broken":{"min""""))
   }
+
+  test("compactJson writes a decimal point under a comma-decimal locale") {
+    val result = Bench.Result(Seq("q" -> 1.25), Nil)
+    val saved = java.util.Locale.getDefault
+    val json =
+      try {
+        java.util.Locale.setDefault(java.util.Locale.GERMANY)
+        result.compactJson("sf")
+      } finally java.util.Locale.setDefault(saved)
+    assert(json.contains(""""q":1.250"""), json)
+  }
 }

@@ -330,4 +330,25 @@ class QueryServerSpec extends AnyFunSuite {
         s"jobs still active ${System.currentTimeMillis() - t1}ms after disconnect: ${lingering.mkString(",")}")
     } finally srv.stop()
   }
+
+  test("stop() terminates the handler pool's threads") {
+    val srv = QueryServer.start(spark, Catalog.forTestData(spark, TestSpark.sf))
+    val prefix = s"graft-query-server-${srv.boundPort}-handler-"
+    def handlers: Set[Thread] = {
+      import scala.jdk.CollectionConverters._
+      Thread.getAllStackTraces.keySet.asScala.toSet
+        .filter(t => t.getName.startsWith(prefix) && t.isAlive)
+    }
+    val r = client.send(
+      HttpRequest.newBuilder(
+        URI.create(s"http://localhost:${srv.boundPort}/health")).GET().build(),
+      HttpResponse.BodyHandlers.ofString())
+    assert(r.statusCode() == 200)
+    val before = handlers
+    assert(before.nonEmpty, "a served request must run on a named handler")
+    srv.stop()
+    before.foreach(_.join(10000))
+    assert(before.forall(!_.isAlive),
+      s"handler threads alive after stop(): ${handlers.map(_.getName)}")
+  }
 }
