@@ -259,10 +259,11 @@ object Dedup {
       nBands: Int = 8): HammingIndex =
     HammingIndex(hammingIndexRows(corpus, idCol, hashCol, nBands), nBands)
 
-  /** Persist a [[HammingIndex]] as parquet under `path` (`buckets/` +
-    * one-row `meta/` with the banding). Overwrites. */
+  /** Persist a [[HammingIndex]] as parquet under `path` (`buckets/`,
+    * committed as snapshot v1, + one-row write-once `meta/` with the
+    * banding). Overwrites. */
   def saveHammingIndex(index: HammingIndex, path: String): Unit = {
-    index.buckets.write.mode("overwrite").parquet(s"$path/buckets")
+    saveParquet(index.buckets, s"$path/buckets")
     val spark = index.buckets.sparkSession
     import spark.implicits._
     Seq(index.nBands).toDF("n_bands")
@@ -732,12 +733,13 @@ object Dedup {
   }
 
   /** Persist a [[MinhashIndex]] as parquet tables under `path`
-    * (`sets/`, `buckets/`, plus a one-row `meta/` carrying the build
-    * parameters so a later load/append/probe cannot run under different
-    * ones). Overwrites any index already at `path`. */
+    * (`sets/`, `buckets/` — each committed as snapshot v1 — plus a
+    * one-row write-once `meta/` carrying the build parameters so a later
+    * load/append/probe cannot run under different ones). Overwrites any
+    * index already at `path`, history included. */
   def saveMinhashIndex(index: MinhashIndex, path: String): Unit = {
-    index.sets.write.mode("overwrite").parquet(s"$path/sets")
-    index.buckets.write.mode("overwrite").parquet(s"$path/buckets")
+    saveParquet(index.sets, s"$path/sets")
+    saveParquet(index.buckets, s"$path/buckets")
     val spark = index.sets.sparkSession
     import spark.implicits._
     Seq((index.n, index.k, index.rowsPerBand))
@@ -745,82 +747,73 @@ object Dedup {
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
   }
 
-  /** List a parquet directory's data files — each load pins the file SET
-    * it saw, making the loaded index a stable snapshot. This is load-
-    * bearing for correctness, not just hygiene: Spark's
-    * `InMemoryFileIndex` equality compares only rootPaths, so two
-    * directory-scans of the same path taken before and after an APPEND
-    * canonicalize as the same plan, and exchange/AQE-stage reuse then
-    * silently serves the PRE-append stage to the post-append probe when
-    * one query tree contains both (exactly the build→probe→append→probe
-    * gate shape). Distinct file lists give distinct rootPaths, so reuse
-    * only unifies scans that really read the same data. */
+  /** The data files of a table's newest committed snapshot
+    * ([[SnapshotDir]]) — each load pins the file SET it saw, making the
+    * loaded index a stable snapshot. This is load-bearing for
+    * correctness, not just hygiene: Spark's `InMemoryFileIndex`
+    * equality compares only rootPaths, so two directory-scans of the
+    * same path taken before and after an APPEND canonicalize as the same
+    * plan, and exchange/AQE-stage reuse then silently serves the
+    * PRE-append stage to the post-append probe when one query tree
+    * contains both (exactly the build→probe→append→probe gate shape).
+    * Distinct file lists give distinct rootPaths, so reuse only unifies
+    * scans that really read the same data. */
   private[graft] def snapshotFiles(
       spark: SparkSession, dir: String): Seq[String] = {
-    // a [[SnapshotDir]]-versioned dir pins the newest COMMITTED manifest
-    // — no directory listing of data files, no swap recovery (versioned
-    // rewrites have no swap), and nothing a pinned reader references is
-    // ever deleted by later maintenance (within gc retention)
-    SnapshotDir.latest(spark, dir) match {
-      case Some((v, files)) =>
-        // an empty committed snapshot is a legal WRITE state (a
-        // versioned-from-birth dir before its first append) but has no
-        // parquet schema source to read — name the state instead of the
-        // opaque zero-path schema-inference error it would become
-        require(files.nonEmpty,
-          s"versioned table at $dir: snapshot v$v is empty — append " +
-            "before the first load/compact (versioned-from-birth dirs " +
-            "are append-first)")
-        return files.sorted
-      case None => ()
-    }
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverInterruptedSwap(fs, dir)
-    val files = fs.listStatus(p).map(_.getPath.toString)
-      .filter(_.endsWith(".parquet")).sorted.toSeq
-    // an explicit guard: spark.read.parquet() over zero paths fails later
-    // with an opaque schema-inference error, long after the real cause
-    // (an index built from an empty corpus, or a mistyped path)
+    val latest = SnapshotDir.latest(spark, dir)
+    require(latest.isDefined,
+      s"no snapshot manifest under $dir — the path is wrong, or the " +
+        "table was written by a plain parquet write; " +
+        "SnapshotDir.enable upgrades such a table in place")
+    val (v, files) = latest.get
+    // an empty committed snapshot is a legal WRITE state (an append
+    // bootstrapped onto an absent dir, before its first commit lands)
+    // but has no parquet schema source to read — name the state instead
+    // of the opaque zero-path schema-inference error it would become
     require(files.nonEmpty,
-      s"no parquet files under $dir — index empty or path wrong")
-    files
+      s"versioned table at $dir: snapshot v$v is empty — append " +
+        "before the first load/compact (versioned-from-birth dirs " +
+        "are append-first)")
+    files.sorted
   }
 
-  /** APPEND chokepoint for every plain-parquet index table: a
-    * [[SnapshotDir]]-versioned dir gets a manifest-committed segment
-    * (invisible until the commit, preserving `df`'s partitioning); a
-    * plain dir gets the classic `mode("append")` write — bit-identical
-    * to the pre-round-13 behavior. */
+  /** SAVE chokepoint: write `df` over `dir` (any previous table and its
+    * history are replaced) and commit the written files as snapshot v1.
+    * Every index data table that is later appended to or rewritten is
+    * saved through here. */
+  private[graft] def saveParquet(df: DataFrame, dir: String): Unit = {
+    df.write.mode("overwrite").parquet(dir)
+    SnapshotDir.enable(df.sparkSession, dir)
+  }
+
+  /** APPEND chokepoint: `df` lands as a manifest-committed segment
+    * (invisible until the commit, preserving `df`'s partitioning). An
+    * absent dir is first versioned as an empty v1 — the bootstrap a
+    * first append onto a fresh dir (a streaming BM25 index) needs. */
   private[graft] def appendParquet(df: DataFrame, dir: String): Unit = {
     val spark = df.sparkSession
-    if (SnapshotDir.isVersioned(spark, dir))
-      SnapshotDir.commitAppend(spark, dir, df)
-    else df.write.mode("append").parquet(dir)
+    if (!SnapshotDir.isVersioned(spark, dir)) SnapshotDir.enable(spark, dir)
+    SnapshotDir.commitAppend(spark, dir, df)
   }
 
-  /** The OVERWRITE twin of [[appendParquet]] — the chokepoint every
-    * full-replacement save (model publish, small lookup table) routes
-    * through: a raw `mode("overwrite")` on a [[SnapshotDir]]-versioned
-    * dir would delete files pinned readers still reference AND leave
-    * the new files manifest-invisible orphans. On a versioned dir the
-    * replacement commits as a NEW snapshot version instead — which is
-    * exactly model-registry semantics: enable versioning on a model
-    * dir and every retrain publishes v+1, pinned consumers keep
+  /** OVERWRITE chokepoint — every full-replacement save (model publish,
+    * small lookup table) routes through here, with model-registry
+    * semantics: the first save of a dir commits v1, and every retrain
+    * commits v+1 as `numFiles` coalesced files — pinned consumers keep
     * scoring with the model they loaded, and [[SnapshotDir.filesAt]]
     * rolls back to any retained version. */
   private[graft] def overwriteParquet(df: DataFrame, dir: String,
       numFiles: Int): Unit = {
     val spark = df.sparkSession
     if (SnapshotDir.isVersioned(spark, dir))
-      SnapshotDir.commitRewrite(spark, dir, df, numFiles)
-    else df.coalesce(numFiles).write.mode("overwrite").parquet(dir)
+      SnapshotDir.commitRewrite(spark, dir, df.coalesce(numFiles))
+    else saveParquet(df.coalesce(numFiles), dir)
   }
 
-  /** Load a persisted [[MinhashIndex]]. The DataFrames are plain parquet
-    * scans over the file set present at load time (a pinned snapshot —
-    * see [[snapshotFiles]]); nothing is materialized until a probe runs,
-    * so loading is metadata-only even for a 100 TB index. */
+  /** Load a persisted [[MinhashIndex]]. The DataFrames are parquet
+    * scans over the newest committed snapshot's files (a pinned
+    * snapshot — see [[snapshotFiles]]); nothing is materialized until a
+    * probe runs, so loading is metadata-only even for a 100 TB index. */
   def loadMinhashIndex(spark: SparkSession, path: String): MinhashIndex = {
     val meta = spark.read.parquet(s"$path/meta").collect().head
     MinhashIndex(
@@ -830,12 +823,13 @@ object Dedup {
       meta.getAs[Int]("rows_per_band"))
   }
 
-  /** TIME TRAVEL ([[SnapshotDir.filesAt]]): load a [[versionMinhashIndex]]-ed
-    * index AS OF a specific committed snapshot version — re-running
+  /** TIME TRAVEL ([[SnapshotDir.filesAt]]): load a persisted index AS
+    * OF a specific committed snapshot version — re-running
     * yesterday's probe against yesterday's index state is how a pipeline
     * reproduces a dedup decision after the index has moved on (appends,
     * deletes, compactions — none of them touch an old version's files
-    * within [[SnapshotDir.gc]] retention). `version` addresses `sets/`
+    * within [[SnapshotDir.gc]] retention, which a delete shrinks to the
+    * newest version). `version` addresses `sets/`
     * and `buckets/` in lockstep: every public maintenance verb commits
     * both tables once per call, so their histories advance together;
     * write-once `meta/` (the n/k/rowsPerBand parameters) is version-free
@@ -929,8 +923,9 @@ object Dedup {
     * the __cid Jaccard-verify join) read pre-shuffled buckets and plan
     * with ZERO corpus-side exchange — only the batch's own small sides
     * shuffle, at every probe, forever (BucketedJoinSpec's co-location
-    * contract applied to the index). Plain-parquet [[saveMinhashIndex]]
-    * stays the format-portable form; this one needs a catalog.
+    * contract applied to the index). The catalog-free
+    * [[saveMinhashIndex]] stays the format-portable form; this one needs
+    * a catalog.
     */
   def saveMinhashIndexBucketed(index: MinhashIndex, table: String,
       path: String, nBuckets: Int = 64): Unit = {
@@ -961,7 +956,7 @@ object Dedup {
     * the post-append probe). The nightly production shape — one probe
     * action, then the append, each its own job — never hits this; the
     * build→probe→append→probe-in-one-tree gate shape must use the
-    * plain-parquet form, whose loads are pinned snapshots. */
+    * catalog-free form, whose loads are pinned snapshots. */
   def loadMinhashIndexBucketed(spark: SparkSession, table: String,
       path: String): MinhashIndex = {
     val meta = spark.read.parquet(s"$path/meta").collect().head
@@ -1001,165 +996,29 @@ object Dedup {
       .saveAsTable(s"${table}_buckets")
   }
 
-  /** Upgrade a persisted [[MinhashIndex]] to MANIFEST-COMMITTED
-    * snapshot versioning ([[SnapshotDir]]) — both data tables; `meta/`
-    * is write-once and stays plain. After this, appends/deletes/
-    * compactions commit new snapshot versions instead of mutating the
-    * directory: pinned readers survive maintenance, and the quiesce
-    * rule shrinks to [[SnapshotDir.gc]] retention. */
-  def versionMinhashIndex(spark: SparkSession, path: String): Unit =
-    Seq("sets", "buckets").foreach(t =>
-      SnapshotDir.enable(spark, s"$path/$t"))
-
-  /** [[versionMinhashIndex]] for a persisted `HammingIndex`. */
-  def versionHammingIndex(spark: SparkSession, path: String): Unit =
-    SnapshotDir.enable(spark, s"$path/buckets")
-
-  /** Heal a compaction swap interrupted by a crash (round 12 — closes
-    * the r11 "table GONE" window): [[compactParquetDir]] marks the swap
-    * with a sibling `<dir>__swapping` file BEFORE moving the live dir
-    * aside, so every crash point is recoverable from the on-disk state:
-    *
-    *  - dir present → no swap in flight (or it never got past staging);
-    *    stale `__compacting`/`__old`/marker leftovers are deleted;
-    *  - dir absent, marker + `__compacting` present → the staged rewrite
-    *    was COMPLETE (the marker is written only after the staging job
-    *    finishes) → roll FORWARD: the compacted table becomes live;
-    *  - dir absent, `__old` present (marker lost or staging gone) →
-    *    roll BACK: the original table becomes live.
-    *
-    * Called by [[snapshotFiles]] (so every index LOAD self-heals — a
-    * reader always sees a complete table, old or new, never neither) and
-    * by [[compactParquetDir]] itself on entry — with DIFFERENT scopes
-    * (round 13, narrowing the reader's destructive surface):
-    *
-    *  - `maintenance = true` (the compact/delete/rewrite entry points,
-    *    which already own the single-writer lock by contract): full
-    *    recovery INCLUDING leftover cleanup in the dir-present case.
-    *  - `maintenance = false` (every load, via [[snapshotFiles]]): when
-    *    the live dir is PRESENT the reader touches NOTHING — the table
-    *    is readable as-is, and any `__compacting`/marker siblings may
-    *    belong to a LIVE compaction mid-staging (minutes-long at scale;
-    *    r12's unconditional cleanup would have deleted its staged
-    *    rewrite). Only when the dir is ABSENT — unreadable without
-    *    healing — does a reader roll the swap forward/back.
-    *
-    * CONTRACT (what remains): dir-absent recovery still assumes the swap
-    * it finds is CRASHED — a reader racing a live compaction inside its
-    * two-rename swap window (milliseconds: rename-away → rename-in, vs
-    * the minutes-long staging the round-13 split took off the table) can
-    * still steal the roll-forward and fail the compactor's own rename
-    * loudly (never silently, and never leaving "neither table"). Do not
-    * LOAD an index while its compaction/delete is running; maintenance
-    * is a nightly single-owner job in the intended deployment. Anything
-    * more concurrent should [[SnapshotDir.enable]] the index's tables
-    * (round 13): versioned dirs have no swap at all — rewrites are a new
-    * segment plus one manifest rename, and this recovery path never
-    * runs. */
-  private def recoverInterruptedSwap(
-      fs: org.apache.hadoop.fs.FileSystem, dir: String,
-      maintenance: Boolean = false): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(dir)
-    val tmp = new Path(dir + "__compacting")
-    val old = new Path(dir + "__old")
-    val marker = new Path(dir + "__swapping")
-    if (fs.exists(p)) {
-      // live table intact: any siblings are leftovers of a crash before
-      // the rename-away (or after the swap completed) — the maintenance
-      // owner drops them; a mere READER leaves them alone (they may be a
-      // live compaction's in-flight staging, and the table is readable)
-      if (maintenance) {
-        if (fs.exists(marker)) fs.delete(marker, false)
-        if (fs.exists(old)) fs.delete(old, true)
-        if (fs.exists(tmp)) fs.delete(tmp, true)
-      }
-    } else if (fs.exists(marker) && fs.exists(tmp)) {
-      require(fs.rename(tmp, p),
-        s"swap recovery could not rename $tmp to $p")
-      fs.delete(marker, false)
-      if (fs.exists(old)) fs.delete(old, true)
-    } else if (fs.exists(old)) {
-      require(fs.rename(old, p),
-        s"swap recovery could not rename $old back to $p")
-      if (fs.exists(marker)) fs.delete(marker, false)
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-    }
-  }
-
   /** Rewrite one persisted parquet table into `numFiles` consolidated
     * files: nightly appends leave a few small files per batch, and after
     * months of ingests the probe pays file-listing and footer-open cost
-    * per tiny file — the classic small-files problem.
-    *
-    * The swap is CRASH-SAFE (round 12, replacing the r11 delete+rename
-    * whose failure window left the table gone): stage the rewrite into
-    * `<dir>__compacting`, write a `<dir>__swapping` commit marker, rename
-    * the live dir aside to `<dir>__old`, rename the staged dir in, then
-    * clean up. A crash at ANY point leaves a state
-    * [[recoverInterruptedSwap]] heals on the next load or compaction —
-    * readers always see a complete table (the original before the marker
-    * commit, the compacted one after), never an empty path.
-    * CompactionCrashSpec kills the job at each crash point and proves it.
-    *
-    * Two documented limits of the plain-parquet form — both REMOVED by
-    * opting the dir into [[SnapshotDir]] versioning (round 13, the
-    * upgrade path the earlier rounds named; SnapshotDirSpec pins both):
-    * open readers holding the PRE-compaction file snapshot (any
-    * not-yet-materialized DataFrame from a load) fail after the swap
-    * with FILE_NOT_EXIST — materialize them first or compact between
-    * jobs (the pl_index_update gate demonstrates both the hazard and the
-    * fix); and compaction must NOT run concurrently with a streaming
-    * probe ([[graft.streaming.StreamingDedup]]) — a micro-batch that
-    * listed the dir mid-swap would read a vanished snapshot. On a
-    * versioned dir a rewrite touches no existing file, so pinned readers
-    * and mid-maintenance micro-batches keep their snapshot; the residual
-    * hazard is [[SnapshotDir.gc]] retention only. */
+    * per tiny file — the classic small-files problem. The rewrite
+    * commits a new snapshot version and deletes nothing: a reader pinned
+    * to an older version keeps materializing after it (SnapshotDirSpec
+    * pins it), and [[SnapshotDir.gc]] reclaims the superseded files. */
   private[functions] def compactParquetDir(
       spark: SparkSession, dir: String, numFiles: Int): Unit =
     rewriteParquetDir(spark, dir, numFiles)(identity)
 
-  /** The generalized staged-rewrite primitive under [[compactParquetDir]]
-    * (identity transform) and the DELETE verbs (anti-join transform):
-    * read the current snapshot, apply `f`, stage `numFiles` files, swap
-    * with the crash-safe marker protocol. */
+  /** The rewrite primitive under [[compactParquetDir]] (identity
+    * transform) and the DELETE verbs (anti-join transform): read the
+    * current snapshot, apply `f`, and commit the result as `numFiles`
+    * files in a new version — a new segment plus ONE manifest rename, so
+    * a crash at any point leaves only uncommitted files for gc. */
   private[functions] def rewriteParquetDir(
       spark: SparkSession, dir: String, numFiles: Int)(
       f: DataFrame => DataFrame): Unit = {
     require(numFiles >= 1)
-    // versioned dirs have no swap at all: the rewrite is a new segment
-    // plus ONE manifest rename, old versions' files untouched — a pinned
-    // pre-rewrite reader keeps materializing, and a crash at any point
-    // leaves only orphan (uncommitted) files for gc
-    if (SnapshotDir.isVersioned(spark, dir)) {
-      SnapshotDir.commitRewrite(spark, dir,
-        f(spark.read.parquet(snapshotFiles(spark, dir): _*)), numFiles)
-      return
-    }
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(dir + "__compacting")
-    val old = new org.apache.hadoop.fs.Path(dir + "__old")
-    val marker = new org.apache.hadoop.fs.Path(dir + "__swapping")
-    recoverInterruptedSwap(fs, dir, maintenance = true)
-    f(spark.read.parquet(snapshotFiles(spark, dir): _*))
-      .repartition(numFiles)
-      .write.mode("overwrite").parquet(tmp.toString)
-    // the marker is the commit point: from here a crash rolls FORWARD to
-    // the compacted table (recoverInterruptedSwap); before it, back to
-    // the original. Hadoop FileSystem reports most delete/rename
-    // failures by returning false, not throwing — every boolean below is
-    // checked so a failed step aborts loudly instead of destroying the
-    // table silently.
-    fs.create(marker, true).close()
-    require(fs.rename(p, old),
-      s"compaction could not move $p aside; original intact, staged " +
-        s"rewrite left at $tmp")
-    require(fs.rename(tmp, p),
-      s"compaction could not rename $tmp to $p — recoverable: the next " +
-        s"load or compaction rolls the swap forward from the marker")
-    fs.delete(marker, false)
-    fs.delete(old, true)
+    SnapshotDir.commitRewrite(spark, dir,
+      f(spark.read.parquet(snapshotFiles(spark, dir): _*))
+        .repartition(numFiles))
   }
 
   /** Compact a persisted [[MinhashIndex]]'s `sets/` and `buckets/`
@@ -1184,7 +1043,7 @@ object Dedup {
     * dups of" content that no longer exists — and keeps the deleted
     * documents' shingle sets on disk.
     *
-    * Both tables rewrite through the crash-safe staged swap
+    * Both tables rewrite as new snapshot versions
     * ([[rewriteParquetDir]] — one snapshot scan each, the delete set
     * anti-joined map-side when broadcast-small): `sets/` FIRST, because
     * it is both the content (the shingle sets a deletion obligation is
@@ -1194,7 +1053,10 @@ object Dedup {
     * batch doc on account of a deleted partner; the `buckets/` rewrite
     * is then space reclamation. A crash between the two rewrites
     * therefore leaves a CORRECT (if unvacuumed) index — re-run the
-    * delete to finish.
+    * delete to finish. Once both rewrites have committed, every older
+    * version of both tables expires ([[SnapshotDir.gc]]), so the deleted
+    * documents' rows are gone from disk — a pinned older version would
+    * otherwise keep them.
     *
     * @param ids one-column DataFrame of the document ids to delete
     */
@@ -1205,6 +1067,8 @@ object Dedup {
       _.join(del, Seq("__cid"), "left_anti"))
     rewriteParquetDir(spark, s"$path/buckets", numFiles)(
       _.join(del, Seq("__cid"), "left_anti"))
+    Seq("sets", "buckets").foreach(t =>
+      SnapshotDir.gc(spark, s"$path/$t", keepVersions = 1))
   }
 
   /** DELETE fingerprints from a persisted `HammingIndex`. The banded
@@ -1222,6 +1086,7 @@ object Dedup {
     val del = hashes.toDF("__ch")
     rewriteParquetDir(spark, s"$path/buckets", numFiles)(
       _.join(del, Seq("__ch"), "left_anti"))
+    SnapshotDir.gc(spark, s"$path/buckets", keepVersions = 1)
   }
 
   /** In-memory append — the same survivors-only derivation as

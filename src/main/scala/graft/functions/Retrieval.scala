@@ -27,8 +27,9 @@ import org.apache.spark.sql.functions._
   * Lifecycle verbs mirror the dedup indexes: build+persist
   * ([[saveBm25Index]]) / load-as-pinned-snapshot ([[loadBm25Index]]) /
   * probe ([[bm25Probe]]) / [[appendToBm25Index]] (cost ∝ batch) /
-  * [[deleteFromBm25Index]] (crash-safe staged rewrite) /
-  * [[compactBm25Index]]. Loads pin the file SET via [[Dedup.snapshotFiles]]
+  * [[deleteFromBm25Index]] (snapshot rewrite) / [[compactBm25Index]].
+  * All three tables are [[SnapshotDir]]-versioned from the save on,
+  * advancing in lockstep. Loads pin the file SET via [[Dedup.snapshotFiles]]
   * for the same reason the dedup indexes do: `InMemoryFileIndex` equality
   * compares only rootPaths, so an unpinned post-append probe could be
   * served a reused pre-append scan stage.
@@ -67,8 +68,9 @@ object Retrieval {
     saveBm25IndexRows(postings, lens, dir, k1, b)
   }
 
-  /** [[saveBm25Index]] over pre-derived (postings, lens) rows. The
-    * corpus statistics RIDE the lens write as an Observation (round 16):
+  /** [[saveBm25Index]] over pre-derived (postings, lens) rows, each
+    * table committed as snapshot v1. The corpus statistics RIDE the
+    * lens write as an Observation (round 16):
     * count/sum are partition-invariant, so the observed values are
     * bit-identical to the former read-back-and-aggregate of the written
     * `lens/` files — one less scan job per save, and at 100 TB one less
@@ -77,18 +79,20 @@ object Retrieval {
       lens: DataFrame, dir: String, k1: Double = 1.2,
       b: Double = 0.75): Unit = {
     val spark = postings.sparkSession
-    postings.write.mode("overwrite").parquet(s"$dir/postings")
+    Dedup.saveParquet(postings, s"$dir/postings")
     val obs = org.apache.spark.sql.Observation(
       s"bm25_save_${java.util.UUID.randomUUID()}")
-    lens.observe(obs,
-        count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("t"))
-      .write.mode("overwrite").parquet(s"$dir/lens")
+    Dedup.saveParquet(lens.observe(obs,
+        count(lit(1)).as("n"), coalesce(sum("dl"), lit(0L)).as("t")),
+      s"$dir/lens")
     import spark.implicits._
-    Seq((obs.get("n").asInstanceOf[Long], obs.get("t").asInstanceOf[Long]))
-      .toDF("n_docs_delta", "total_dl_delta")
-      .select(col("n_docs_delta"), col("total_dl_delta"),
-        lit(k1).as("k1"), lit(b).as("b"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    Dedup.saveParquet(
+      Seq((obs.get("n").asInstanceOf[Long], obs.get("t").asInstanceOf[Long]))
+        .toDF("n_docs_delta", "total_dl_delta")
+        .select(col("n_docs_delta"), col("total_dl_delta"),
+          lit(k1).as("k1"), lit(b).as("b"))
+        .coalesce(1),
+      s"$dir/meta")
   }
 
   /** Load as a pinned snapshot. The meta collect is bounded by the number
@@ -97,8 +101,8 @@ object Retrieval {
     loadBm25Files(spark, dir,
       sub => Dedup.snapshotFiles(spark, s"$dir/$sub"))
 
-  /** TIME TRAVEL ([[SnapshotDir.filesAt]]): load a [[versionBm25Index]]-ed
-    * index AS OF a specific committed snapshot version — the retrieval
+  /** TIME TRAVEL ([[SnapshotDir.filesAt]]): load the index AS OF a
+    * specific committed snapshot version — the retrieval
     * twin of [[Dedup.loadMinhashIndexAt]]. `version` addresses all three
     * tables (`postings/`, `lens/`, `meta/`) in LOCKSTEP: every public
     * maintenance verb (append, delete, compact) commits each table
@@ -106,7 +110,7 @@ object Retrieval {
     * and `meta/` MUST travel with the data (yesterday's probe needs
     * yesterday's n_docs/total_dl, or idf and length normalization score
     * against the wrong corpus). Fails loudly on an unknown or
-    * gc-expired version. */
+    * gc-expired version — a delete expires every version but its own. */
   def loadBm25IndexAt(spark: SparkSession, dir: String,
       version: Long): Bm25Index =
     loadBm25Files(spark, dir,
@@ -179,26 +183,17 @@ object Retrieval {
     Dedup.appendParquet(metaDelta, s"$dir/meta")
   }
 
-  /** Whether `dir` exists AND holds at least one committed parquet file
-    * (a crashed write can leave the dir with only `_temporary` litter —
-    * "exists" alone is not "has data"). */
+  /** Whether `dir` holds at least one committed parquet file (a crashed
+    * write can leave the dir with only uncommitted litter — "exists"
+    * alone is not "has data"). */
   private def dirHasParquet(spark: SparkSession, dir: String): Boolean =
     committedFiles(spark, dir).nonEmpty
 
+  /** A table's committed content IS its newest manifest — uncommitted
+    * segment files are invisible by design. */
   private def committedFiles(
-      spark: SparkSession, dir: String): Seq[String] = {
-    // a versioned dir's committed content IS its newest manifest —
-    // uncommitted segment files are invisible by design
-    SnapshotDir.latest(spark, dir) match {
-      case Some((_, files)) => return files
-      case None => ()
-    }
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).map(_.getPath.toString)
-      .filter(_.endsWith(".parquet")).toIndexedSeq
-  }
+      spark: SparkSession, dir: String): Seq[String] =
+    SnapshotDir.latest(spark, dir).map(_._2).getOrElse(Nil)
 
   /** Heal a CRASHED append (round 13 — the streaming replay repair,
     * replacing r12's delete-only form): remove whatever fraction of
@@ -213,7 +208,9 @@ object Retrieval {
     * FIRST append crashed between the manifest commit and the first
     * write has nothing to heal (the r12 form threw on the missing dir —
     * a permanent crash loop in exactly the recovery path the manifest
-    * protocol exists for). */
+    * protocol exists for). The repair expires no version: it runs
+    * between micro-batches of a live stream, whose pinned readers
+    * outlive it. */
   def repairBm25Append(spark: SparkSession, dir: String,
       ids: DataFrame, numFiles: Int = 32): Unit = {
     val del = ids.toDF("doc_id").localCheckpoint()
@@ -255,8 +252,10 @@ object Retrieval {
 
   /** DELETE documents — the retention verb. The deleted documents'
     * statistics are captured (one bounded row) BEFORE the rewrites, then
-    * `postings/` and `lens/` rewrite through the crash-safe staged swap
-    * ([[Dedup.rewriteParquetDir]]), then the negative meta delta lands.
+    * `postings/` and `lens/` rewrite as new snapshot versions
+    * ([[Dedup.rewriteParquetDir]]), then the negative meta delta lands,
+    * then every older version of `postings/` and `lens/` expires so the
+    * deleted documents' rows are gone from disk.
     * Content removal is ordered first on purpose: a crash after the
     * rewrites but before the meta row leaves deleted documents fully
     * unservable with stale idf statistics (scores shift, no deleted
@@ -278,11 +277,6 @@ object Retrieval {
     Dedup.rewriteParquetDir(spark, s"$dir/lens", numFiles)(
       _.join(del, Seq("doc_id"), "left_anti"))
     import spark.implicits._
-    // through the append chokepoint: on a [[versionBm25Index]]-ed index
-    // the delta must land manifest-committed — a raw mode("append") file
-    // would be an orphan no snapshot reader ever sees, leaving probes
-    // between the delete and the next compaction scoring with stale
-    // pre-delete n_docs/total_dl (and gc would reclaim the orphan)
     Dedup.appendParquet(
       Seq((-gone.getAs[Long]("n"), -gone.getAs[Long]("t")))
         .toDF("n_docs_delta", "total_dl_delta")
@@ -290,6 +284,8 @@ object Retrieval {
           lit(null).cast("double").as("k1"), lit(null).cast("double").as("b"))
         .coalesce(1),
       s"$dir/meta")
+    Seq("postings", "lens").foreach(t =>
+      SnapshotDir.gc(spark, s"$dir/$t", keepVersions = 1))
   }
 
   /** Compact the data tables and collapse the accumulated meta deltas to
@@ -300,13 +296,6 @@ object Retrieval {
     * table rewrites but before its negative delta landed would otherwise
     * overcount n_docs/total_dl forever). Bit-identical to the delta sum
     * in every healthy history; probe-neutral either way. */
-  /** Upgrade a persisted BM25 index to manifest-committed snapshot
-    * versioning ([[SnapshotDir]]) — all three tables, `meta/` included
-    * (its delta ledger is appended and rewritten like the data). */
-  def versionBm25Index(spark: SparkSession, dir: String): Unit =
-    Seq("postings", "lens", "meta").foreach(t =>
-      SnapshotDir.enable(spark, s"$dir/$t"))
-
   def compactBm25Index(spark: SparkSession, dir: String,
       numFiles: Int = 32): Unit = {
     Dedup.compactParquetDir(spark, s"$dir/postings", numFiles)
@@ -321,7 +310,7 @@ object Retrieval {
     * pre-partitioned doc buckets, and the per-document score pivot
     * reuses the join's doc_id partitioning — the only exchange left in
     * a probe is the query-terms' own (tiny) filtered postings moving to
-    * their doc buckets. Plain-parquet [[saveBm25Index]] stays the
+    * their doc buckets. The catalog-free [[saveBm25Index]] stays the
     * format-portable form; this one needs a catalog, and shares the
     * bucketed-MinHash caveat: catalog tables cannot pin a file-set
     * snapshot, so do not evaluate pre- and post-append loads of the same
@@ -339,22 +328,25 @@ object Retrieval {
       .option("path", s"$path/lens")
       .bucketBy(nBuckets, "doc_id").sortBy("doc_id")
       .saveAsTable(s"${table}_lens")
-    spark.table(s"${table}_lens")
-      .agg(count(lit(1)).as("n_docs_delta"),
-        coalesce(sum("dl"), lit(0L)).as("total_dl_delta"))
-      .select(col("n_docs_delta"), col("total_dl_delta"),
-        lit(k1).as("k1"), lit(b).as("b"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
+    // the data tables are catalog-owned; the meta delta ledger is an
+    // ordinary versioned table, like the catalog-free form's
+    Dedup.saveParquet(
+      spark.table(s"${table}_lens")
+        .agg(count(lit(1)).as("n_docs_delta"),
+          coalesce(sum("dl"), lit(0L)).as("total_dl_delta"))
+        .select(col("n_docs_delta"), col("total_dl_delta"),
+          lit(k1).as("k1"), lit(b).as("b"))
+        .coalesce(1),
+      s"$path/meta")
   }
 
   /** Load the bucketed-table form (catalog relations — scans carry the
     * bucket spec, so probe plans co-locate). */
   def loadBm25IndexBucketed(spark: SparkSession, table: String,
       path: String): Bm25Index = {
-    // meta through the snapshot read chokepoint, like loadBm25Index —
-    // identical on a plain dir, pins the manifest if `$path/meta` was
-    // SnapshotDir-versioned (the data tables are catalog-owned and
-    // cannot be versioned, but the meta ledger is an ordinary dir)
+    // meta through the snapshot read chokepoint, like loadBm25Index
+    // (the data tables are catalog-owned and cannot be versioned, but
+    // the meta ledger is an ordinary versioned table)
     val meta = spark.read
       .parquet(Dedup.snapshotFiles(spark, s"$path/meta"): _*)
       .agg(sum("n_docs_delta").as("n"), sum("total_dl_delta").as("t"),
@@ -405,10 +397,9 @@ object Retrieval {
     pinnedLens.write.mode("append").format("parquet")
       .bucketBy(nb, "doc_id").sortBy("doc_id")
       .saveAsTable(s"${table}_lens")
-    // through the append chokepoint (the delete-path lesson): identical
-    // on a plain dir, but if anyone versions `$path/meta` a raw
-    // mode("append") file would be a manifest-invisible orphan and
-    // probes would undercount n_docs/total_dl until compaction
+    // through the append chokepoint: a raw mode("append") file would be
+    // a manifest-invisible orphan and probes would undercount
+    // n_docs/total_dl
     Dedup.appendParquet(
       pinnedLens
         .agg(count(lit(1)).as("n_docs_delta"),

@@ -455,10 +455,9 @@ object Similarity {
     * vectors round-trip parquet exactly, so save → [[loadKmeansModel]] →
     * [[kmeansAssignWith]] is bit-identical to assigning with the
     * in-memory model (`pl_kmeans_batch` hash-proves it). Routed through
-    * the overwrite chokepoint: on a [[SnapshotDir]]-versioned model dir
-    * each save COMMITS a new model version (registry semantics — pinned
-    * consumers keep the model they loaded; [[loadKmeansModelAt]] rolls
-    * back), on a plain dir it is an ordinary overwrite. */
+    * the overwrite chokepoint: each save COMMITS a new model version
+    * (registry semantics — pinned consumers keep the model they loaded;
+    * [[loadKmeansModelAt]] rolls back). */
   def saveKmeansModel(spark: SparkSession,
       centroids: Array[Array[Float]], dir: String): Unit = {
     import spark.implicits._
@@ -471,7 +470,7 @@ object Similarity {
 
   /** Load a persisted kmeans model back to the driver-held k × dim
     * array (bounded by construction — the model, never data). Pins the
-    * newest committed version on a versioned dir. */
+    * newest committed version. */
   def loadKmeansModel(spark: SparkSession,
       dir: String): Array[Array[Float]] =
     kmeansModelRows(
@@ -489,12 +488,6 @@ object Similarity {
     df.orderBy("cluster")
       .collect()
       .map(_.getSeq[Float](1).toArray)
-
-  /** Upgrade a persisted kmeans model dir to manifest-committed
-    * snapshot versioning — after this every [[saveKmeansModel]]
-    * publishes a new model VERSION instead of mutating the dir. */
-  def versionKmeansModel(spark: SparkSession, dir: String): Unit =
-    SnapshotDir.enable(spark, dir)
 
   /** A trained nearest-class-centroid model: class labels (sorted,
     * stringified) and their mean embeddings — |classes| × dim,
@@ -613,10 +606,9 @@ object Similarity {
   }
 
   /** Persist a [[CentroidModel]] (one row per class). Floats round-trip
-    * parquet exactly; routed through the overwrite chokepoint, so a
-    * [[SnapshotDir]]-versioned model dir gets registry semantics
-    * (each retrain commits a version; [[loadCentroidModelAt]] rolls
-    * back). */
+    * parquet exactly; routed through the overwrite chokepoint, so the
+    * model dir has registry semantics (each retrain commits a version;
+    * [[loadCentroidModelAt]] rolls back). */
   def saveCentroidModel(spark: SparkSession, model: CentroidModel,
       dir: String): Unit = {
     import spark.implicits._
@@ -628,7 +620,7 @@ object Similarity {
   }
 
   /** Load a persisted [[CentroidModel]] (pins the newest committed
-    * version on a versioned dir). */
+    * version). */
   def loadCentroidModel(spark: SparkSession, dir: String): CentroidModel =
     centroidModelRows(
       spark.read.parquet(Dedup.snapshotFiles(spark, dir): _*))
@@ -644,10 +636,6 @@ object Similarity {
     CentroidModel(rows.map(_.getString(0)),
       rows.map(_.getSeq[Float](1).toArray))
   }
-
-  /** Upgrade a persisted centroid model dir to snapshot versioning. */
-  def versionCentroidModel(spark: SparkSession, dir: String): Unit =
-    SnapshotDir.enable(spark, dir)
 
   def ivfTopK(
       queries: DataFrame, corpus: DataFrame,
@@ -1154,11 +1142,12 @@ object Similarity {
     IvfIndex(assigned, cents)
   }
 
-  /** Persist an [[IvfIndex]] as parquet under `path` (`cells/` +
-    * `centroids/` — float arrays round-trip parquet exactly, so the
-    * loaded quantizer is bit-identical). Overwrites. */
+  /** Persist an [[IvfIndex]] as parquet under `path` (`cells/`,
+    * committed as snapshot v1, + write-once `centroids/` — float arrays
+    * round-trip parquet exactly, so the loaded quantizer is
+    * bit-identical). Overwrites. */
   def saveIvfIndex(index: IvfIndex, path: String): Unit = {
-    index.cells.write.mode("overwrite").parquet(s"$path/cells")
+    Dedup.saveParquet(index.cells, s"$path/cells")
     val spark = index.cells.sparkSession
     import spark.implicits._
     index.centroids.zipWithIndex
@@ -1202,12 +1191,6 @@ object Similarity {
   /** Compact a persisted [[IvfIndex]]'s `cells/` table (the centroid
     * table is one tiny file and never grows). Same maintenance job as
     * [[graft.functions.Dedup.compactMinhashIndex]]. */
-  /** Upgrade a persisted [[IvfIndex]]'s `cells/` table to
-    * manifest-committed snapshot versioning ([[SnapshotDir]]; the
-    * bounded centroid model table is write-once and stays plain). */
-  def versionIvfIndex(spark: SparkSession, path: String): Unit =
-    SnapshotDir.enable(spark, s"$path/cells")
-
   def compactIvfIndex(spark: SparkSession, path: String,
       numFiles: Int = 32): Unit =
     Dedup.compactParquetDir(spark, s"$path/cells", numFiles)
@@ -1344,10 +1327,10 @@ object Similarity {
     }.toArray
   }
 
-  /** Persist a [[PqIndex]] under `path` (`codes/` + `books/`).
-    * Overwrites. */
+  /** Persist a [[PqIndex]] under `path` (`codes/`, committed as
+    * snapshot v1, + write-once `books/`). Overwrites. */
   def savePqIndex(index: PqIndex, path: String): Unit = {
-    index.codes.write.mode("overwrite").parquet(s"$path/codes")
+    Dedup.saveParquet(index.codes, s"$path/codes")
     saveBooks(index.codes.sparkSession, index.books, s"$path/books")
   }
 
@@ -1370,10 +1353,6 @@ object Similarity {
       s"$path/codes")
 
   /** Compact a persisted [[PqIndex]]'s `codes/` table. */
-  /** [[versionIvfIndex]] for a persisted [[PqIndex]]'s `codes/`. */
-  def versionPqIndex(spark: SparkSession, path: String): Unit =
-    SnapshotDir.enable(spark, s"$path/codes")
-
   def compactPqIndex(spark: SparkSession, path: String,
       numFiles: Int = 32): Unit =
     Dedup.compactParquetDir(spark, s"$path/codes", numFiles)
@@ -1400,7 +1379,9 @@ object Similarity {
 
   /** Persist an [[IvfPqIndex]] under `path` (`cellcodes/` +
     * `centroids/` + `books/` + one-row `meta/` carrying the residual
-    * flag, so the stored index is self-describing). Overwrites. */
+    * flag, so the stored index is self-describing). `cellcodes/` is
+    * committed as snapshot v1; the other three tables are write-once.
+    * Overwrites. */
   def saveIvfPqIndex(index: IvfPqIndex, path: String): Unit = {
     val spark = index.cellCodes.sparkSession
     import spark.implicits._
@@ -1409,12 +1390,12 @@ object Similarity {
     // of one whose tables all read cleanly while the absent meta/
     // defaults the residual flag to false — which would serve a residual
     // index with raw-vector arithmetic, the silent mix-up the flag
-    // exists to prevent. (Re-saving OVER a live index is still not
-    // crash-atomic across the four tables — the documented plain-parquet
-    // trade; save to a fresh path for that.)
+    // exists to prevent. (Re-saving OVER a live index is not
+    // crash-atomic across the four tables — a save replaces each table
+    // and its history; save to a fresh path for that.)
     Seq(index.residual).toDF("residual")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-    index.cellCodes.write.mode("overwrite").parquet(s"$path/cellcodes")
+    Dedup.saveParquet(index.cellCodes, s"$path/cellcodes")
     index.centroids.zipWithIndex
       .map { case (v, i) => (i, v.toSeq) }.toSeq
       .toDF("cell", "vec")
@@ -1482,11 +1463,6 @@ object Similarity {
   }
 
   /** Compact a persisted [[IvfPqIndex]]'s `cellcodes/` table. */
-  /** [[versionIvfIndex]] for a persisted [[IvfPqIndex]]'s
-    * `cellcodes/`. */
-  def versionIvfPqIndex(spark: SparkSession, path: String): Unit =
-    SnapshotDir.enable(spark, s"$path/cellcodes")
-
   def compactIvfPqIndex(spark: SparkSession, path: String,
       numFiles: Int = 32): Unit =
     Dedup.compactParquetDir(spark, s"$path/cellcodes", numFiles)
@@ -1494,8 +1470,10 @@ object Similarity {
   /** DELETE vectors from a persisted [[IvfIndex]] / [[PqIndex]] /
     * [[IvfPqIndex]] — the retention verb
     * ([[graft.functions.Dedup.deleteFromMinhashIndex]] has the full
-    * rationale): one crash-safe staged rewrite of the per-vector table,
-    * the delete-id set anti-joined map-side when broadcast-small. The
+    * rationale): one snapshot rewrite of the per-vector table, the
+    * delete-id set anti-joined map-side when broadcast-small, after
+    * which the table's older versions expire so the deleted vectors are
+    * gone from disk. The
     * bounded model tables (centroids, codebooks) are statistical
     * summaries, not member content, and stay frozen — the incremental
     * contract survives deletion.
@@ -1504,18 +1482,22 @@ object Similarity {
     */
   def deleteFromIvfIndex(spark: SparkSession, path: String,
       ids: DataFrame, numFiles: Int = 32): Unit =
-    Dedup.rewriteParquetDir(spark, s"$path/cells", numFiles)(
-      _.join(ids.toDF("neighbor_id"), Seq("neighbor_id"), "left_anti"))
+    deleteVectors(spark, s"$path/cells", ids, numFiles)
 
   def deleteFromPqIndex(spark: SparkSession, path: String,
       ids: DataFrame, numFiles: Int = 32): Unit =
-    Dedup.rewriteParquetDir(spark, s"$path/codes", numFiles)(
-      _.join(ids.toDF("neighbor_id"), Seq("neighbor_id"), "left_anti"))
+    deleteVectors(spark, s"$path/codes", ids, numFiles)
 
   def deleteFromIvfPqIndex(spark: SparkSession, path: String,
       ids: DataFrame, numFiles: Int = 32): Unit =
-    Dedup.rewriteParquetDir(spark, s"$path/cellcodes", numFiles)(
+    deleteVectors(spark, s"$path/cellcodes", ids, numFiles)
+
+  private def deleteVectors(spark: SparkSession, table: String,
+      ids: DataFrame, numFiles: Int): Unit = {
+    Dedup.rewriteParquetDir(spark, table, numFiles)(
       _.join(ids.toDF("neighbor_id"), Seq("neighbor_id"), "left_anti"))
+    SnapshotDir.gc(spark, table, keepVersions = 1)
+  }
 
   /** The per-ingest probe against a prebuilt [[IvfIndex]]. */
   def incrementalSemDedup(

@@ -3,15 +3,15 @@ package graft.functions
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** MANIFEST-COMMITTED snapshot versioning for a persisted parquet
-  * directory — the "table format with real snapshot isolation" upgrade
-  * path the plain-parquet index docs have named since round 11, shipped
-  * opt-in (round 13). Plain directories keep their exact prior behavior;
-  * calling [[enable]] on an index's table dir upgrades every subsequent
-  * load/append/rewrite that flows through the [[Dedup.snapshotFiles]] /
-  * [[Dedup.rewriteParquetDir]] / [[Dedup.appendParquet]] chokepoints:
+/** MANIFEST-COMMITTED snapshot versioning — the one on-disk format of
+  * every persisted index and model table that flows through the
+  * [[Dedup.snapshotFiles]] / [[Dedup.appendParquet]] /
+  * [[Dedup.overwriteParquet]] / [[Dedup.rewriteParquetDir]]
+  * chokepoints. Each table is versioned from its first write: a save
+  * commits its files as v1, and every later append, rewrite or model
+  * retrain commits v+1.
   *
-  *  - Layout: data files live under the dir (the pre-enable files at the
+  *  - Layout: data files live under the dir (a save's files at the
   *    root, each later write in its own `seg-<uuid>/` subdirectory);
   *    `_manifests/v<seq>.list` files each hold one committed snapshot —
   *    the dir-relative paths of exactly the data files that version
@@ -29,20 +29,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    manifest key), which is the same one-object commit point. The
   *    manifest design is what makes that swap local: commit touches
   *    exactly one small file, everything else is immutable data.
-  *  - READERS pin the newest committed manifest. Nothing they reference
-  *    is ever deleted by append/rewrite — so the two plain-parquet
-  *    hazards are gone for versioned dirs: an open pre-compaction
-  *    DataFrame keeps materializing AFTER the compaction (no
-  *    FILE_NOT_EXIST), and a load can never race a staged swap (there is
-  *    no swap — a rewrite is just files + one manifest rename). The
-  *    quiesce rule shrinks to [[gc]] retention: only expiring old
-  *    versions can invalidate a reader, and only one pinned to an
-  *    expired version.
-  *  - WRITERS stay single per index (the existing maintenance contract):
-  *    the version sequence is allocated by listing, so two concurrent
+  *  - READERS pin the newest committed manifest. Appends and rewrites
+  *    never delete a file an older manifest references, so an open
+  *    DataFrame keeps materializing after any later append or
+  *    compaction, and a load never races a writer (there is no swap —
+  *    a rewrite is new files plus one manifest rename). Only expiring
+  *    old versions can invalidate a reader, and only one pinned to an
+  *    expired version: [[gc]], which the delete verbs run with
+  *    `keepVersions = 1` so that deleted rows are physically gone.
+  *  - WRITERS stay single per index (the maintenance contract): the
+  *    version sequence is allocated by listing, so two concurrent
   *    committers could race to the same number — the rename of an
   *    existing target fails loudly on sane filesystems, and the contract
   *    says don't.
+  *  - A table dir written by a plain parquet write (no `_manifests/`)
+  *    is not readable through the chokepoints; [[enable]] upgrades it
+  *    in place, its current files becoming v1.
   */
 object SnapshotDir {
 
@@ -140,13 +142,15 @@ object SnapshotDir {
     v
   }
 
-  /** Upgrade a plain parquet dir in place: v1 = the data files currently
-    * at the root (an absent or empty dir versions as an EMPTY v1 — the
-    * versioned-from-birth shape a bootstrapping APPEND-ONLY stream
-    * wants: the first append commits v2 with the first batch). An empty
-    * v1 is writable but not readable — parquet has no schema source
-    * until the first append lands, so a load/compact before it fails
-    * loudly ([[Dedup.snapshotFiles]] names this state). Calling on an
+  /** Commit the data files currently at the root of `dir` as v1: the
+    * second half of every save ([[Dedup.saveParquet]]), the bootstrap
+    * of an append onto an absent dir ([[Dedup.appendParquet]] — an
+    * absent or empty dir versions as an EMPTY v1, whose first append
+    * commits v2), and the in-place upgrade of a table a plain parquet
+    * write left without manifests. An empty v1 is writable but not
+    * readable — parquet has no schema source until the first append
+    * lands, so a load/compact before it fails loudly
+    * ([[Dedup.snapshotFiles]] names this state). Calling on an
     * already-versioned dir fails loudly (the manifest history is the
     * source of truth — re-baselining it would orphan pinned readers). */
   def enable(spark: SparkSession, dir: String): Unit = {
@@ -164,35 +168,35 @@ object SnapshotDir {
     * `seg-<uuid>/` subdirectory (invisible until the manifest commits),
     * and vN+1 = vN ∪ the segment's files. */
   def commitAppend(spark: SparkSession, dir: String, df: DataFrame): Unit = {
-    val fs = fsOf(spark, dir)
-    val (prevV, prevFiles) = latest(spark, dir).getOrElse(
-      throw new IllegalStateException(s"$dir is not versioned"))
-    val seg = s"seg-${java.util.UUID.randomUUID}"
-    df.write.mode("overwrite").parquet(new Path(dir, seg).toString)
-    val segRel = fs.listStatus(new Path(dir, seg)).toSeq.map(_.getPath)
-      .filter(_.getName.endsWith(".parquet"))
-      .map(p => s"$seg/${p.getName}")
-    val prevRel = prevFiles.map(abs =>
-      relativize(dir, abs))
-    commit(fs, dir, prevV, prevRel ++ segRel)
+    val (prevV, prevFiles) = latestOrFail(spark, dir)
+    commit(fsOf(spark, dir), dir, prevV,
+      prevFiles.map(relativize(dir, _)) ++ writeSegment(dir, df))
   }
 
   /** Replace the table's content with `df` as a new snapshot version
-    * (the compaction/delete path): new segment + a manifest listing ONLY
-    * it. Old versions' files stay on disk for pinned readers until
-    * [[gc]]. */
-  def commitRewrite(spark: SparkSession, dir: String, df: DataFrame,
-      numFiles: Int): Unit = {
-    val fs = fsOf(spark, dir)
-    val (prevV, _) = latest(spark, dir).getOrElse(
+    * (the compaction/delete/model-retrain path): new segment + a
+    * manifest listing ONLY it. `df` is written with the partitioning it
+    * has — callers choose the file count. Old versions' files stay on
+    * disk for pinned readers until [[gc]]. */
+  def commitRewrite(spark: SparkSession, dir: String, df: DataFrame): Unit = {
+    val (prevV, _) = latestOrFail(spark, dir)
+    commit(fsOf(spark, dir), dir, prevV, writeSegment(dir, df))
+  }
+
+  private def latestOrFail(spark: SparkSession,
+      dir: String): (Long, Seq[String]) =
+    latest(spark, dir).getOrElse(
       throw new IllegalStateException(s"$dir is not versioned"))
+
+  /** Write `df` into a fresh `seg-<uuid>/` subdirectory of `dir`; the
+    * segment's dir-relative data-file paths, not yet committed. */
+  private def writeSegment(dir: String, df: DataFrame): Seq[String] = {
     val seg = s"seg-${java.util.UUID.randomUUID}"
-    df.repartition(numFiles)
-      .write.mode("overwrite").parquet(new Path(dir, seg).toString)
-    val segRel = fs.listStatus(new Path(dir, seg)).toSeq.map(_.getPath)
+    val segPath = new Path(dir, seg)
+    df.write.mode("overwrite").parquet(segPath.toString)
+    fsOf(df.sparkSession, dir).listStatus(segPath).toSeq.map(_.getPath)
       .filter(_.getName.endsWith(".parquet"))
       .map(p => s"$seg/${p.getName}")
-    commit(fs, dir, prevV, segRel)
   }
 
   private def relativize(dir: String, abs: String): String = {

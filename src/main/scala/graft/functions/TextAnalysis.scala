@@ -632,7 +632,8 @@ object TextAnalysis {
     * [[loadNbModel]] → [[nbClassify]] is bit-identical to classifying
     * with the in-memory model (`pl_nb_model_batch` hash-proves it) —
     * train ONCE on the seed set, classify every nightly batch under the
-    * frozen model. Overwrites. */
+    * frozen model. Each save commits a new version of both tables (the
+    * registry semantics of [[Dedup.overwriteParquet]]). */
   def saveNbModel(model: NbModel, dir: String,
       numFiles: Int = 8): Unit = {
     Dedup.overwriteParquet(model.priors, s"$dir/priors", numFiles = 1)
@@ -644,32 +645,24 @@ object TextAnalysis {
     * [[saveNbModel]] commits `priors/` and `token_log_probs/` as two
     * independent [[graft.functions.SnapshotDir]] commits, so a crash
     * between them leaves the version counters permanently skewed —
-    * after which a versioned load would silently pair a priors table
-    * and a token table from DIFFERENT trainings. Loading therefore
-    * requires the two dirs' committed version sets to match exactly
-    * (and versioning to be all-or-neither); a skewed registry must be
-    * repaired (re-save) before it can be read. */
+    * after which a load would silently pair a priors table and a token
+    * table from DIFFERENT trainings. Loading therefore requires the two
+    * dirs' committed version sets to match exactly; a skewed registry
+    * must be repaired (re-save) before it can be read. */
   private def requireNbLockstep(
       spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-    val pv = SnapshotDir.isVersioned(spark, s"$dir/priors")
-    val tv = SnapshotDir.isVersioned(spark, s"$dir/token_log_probs")
-    require(pv == tv,
-      s"NB model dir $dir: versioning is enabled on only one of " +
-        "priors/ and token_log_probs/ — the registry is skewed")
-    if (pv) {
-      val a = SnapshotDir.versions(spark, s"$dir/priors")
-      val b = SnapshotDir.versions(spark, s"$dir/token_log_probs")
-      require(a == b,
-        s"NB model dir $dir: priors/ versions $a and token_log_probs/ " +
-          s"versions $b diverge — a saveNbModel crashed between its two " +
-          "commits; re-save the model before loading")
-    }
+    val a = SnapshotDir.versions(spark, s"$dir/priors")
+    val b = SnapshotDir.versions(spark, s"$dir/token_log_probs")
+    require(a == b,
+      s"NB model dir $dir: priors/ versions $a and token_log_probs/ " +
+        s"versions $b diverge — a saveNbModel crashed between its two " +
+        "commits; re-save the model before loading")
   }
 
-  /** Load a persisted [[NbModel]] — metadata-only (plain parquet scans;
+  /** Load a persisted [[NbModel]] — metadata-only (parquet scans;
     * nothing materializes until a classification runs). Pins the newest
-    * committed version of each table on a versioned model dir, after
-    * the [[requireNbLockstep]] skew check. */
+    * committed version of each table, after the [[requireNbLockstep]]
+    * skew check. */
   def loadNbModel(spark: org.apache.spark.sql.SparkSession,
       dir: String): NbModel = {
     requireNbLockstep(spark, dir)
@@ -694,14 +687,6 @@ object TextAnalysis {
       spark.read.parquet(
         SnapshotDir.filesAt(spark, s"$dir/token_log_probs", version): _*))
   }
-
-  /** Upgrade a persisted NB model dir to manifest-committed snapshot
-    * versioning — after this every [[saveNbModel]] publishes a new
-    * model VERSION instead of mutating the dir. */
-  def versionNbModel(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Unit =
-    Seq("priors", "token_log_probs").foreach(t =>
-      SnapshotDir.enable(spark, s"$dir/$t"))
 
   /** The threshold QUALITY/DOMAIN FILTER composition (the FineWeb-Edu /
     * DCLM curation step): keep documents the frozen model assigns

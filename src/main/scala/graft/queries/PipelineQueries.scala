@@ -550,13 +550,13 @@ object PipelineQueries {
     "doc_id < 250", "doc_id < 375", "doc_id < 375 AND doc_id % 5 <> 0"))
 
   /** Generalized N-state form: one full BM25 replay per lifecycle
-    * predicate, each tagged with its day index. The versioned gate adds
-    * a fourth state — a probe BETWEEN delete and compact — whose
+    * predicate, each tagged with its day index. `pl_bm25_versioned`
+    * adds a fourth state — a probe BETWEEN delete and compact — whose
     * predicate equals the post-delete one: on a healthy history the
     * delta-summed meta is bit-identical to the recount, so the
     * pre-compact probe must already score like the from-scratch corpus
     * (this is exactly the window the round-13 meta-bypass bug got
-    * wrong on versioned dirs). */
+    * wrong). */
   private def bm25LifecycleOracleSql(preds: Seq[String]): String = {
     val terms = Seq("table", "query", "spark")
     val inList = terms.map(t => s"'$t'").mkString(", ")
@@ -2136,11 +2136,10 @@ object PipelineQueries {
           .createTempDirectory("graft-minhash-index").toString
         Dedup.saveMinhashIndex(minhashGateIndex(s, d), dir)
         val day1 = docs.filter(col("doc_id") >= 250 && col("doc_id") < 375)
-        // materialize day-1's survivors BEFORE compacting: their plan
-        // reads the pre-compaction file snapshot, which the compaction
-        // rewrite deletes — the open-reader hazard the compaction
-        // scaladoc warns about (a table format would give snapshot
-        // isolation; plain parquet readers must materialize first)
+        // day-1's survivors are checkpointed here; pl_index_versioned
+        // runs the same chain without the checkpoint — the compaction
+        // below commits a new snapshot version and deletes no file the
+        // day-1 plan reads, so both orders give the same rows
         val surv1 = Dedup.incrementalMinhashDedup(
           day1, Dedup.loadMinhashIndex(s, dir), "doc_id", "text",
           threshold = 0.4).localCheckpoint()
@@ -2159,24 +2158,20 @@ object PipelineQueries {
           .select("day", "doc_id").orderBy("day", "doc_id")
       }),
 
-    // VERSIONED MinHash lifecycle (round 14): the identical
-    // save→probe→append→compact→probe chain as pl_index_update, on a
-    // SnapshotDir-versioned index, under the SAME oracle — the
-    // semantics-neutrality twin the BM25 family got in round 13, now
-    // proving a SECOND index family's versioned path end-to-end. One
-    // deliberate difference doubles as the point: day-1's survivor
-    // DataFrame is NOT localCheckpoint-ed before the compaction (the
-    // open-reader materialization the plain-dir gate needs) — a
-    // versioned reader pins a manifest whose files later maintenance
-    // never deletes, so the lazy plan still evaluates correctly when
-    // the final union materializes it AFTER the append and compact.
+    // MinHash lifecycle with a LAZY day-1 reader (round 14): the
+    // identical save→probe→append→compact→probe chain as
+    // pl_index_update, under the SAME oracle. One deliberate difference
+    // is the point: day-1's survivor DataFrame is NOT localCheckpoint-ed
+    // before the compaction — the reader pins a snapshot manifest whose
+    // files appends and compactions never delete, so the lazy plan still
+    // evaluates correctly when the final union materializes it AFTER the
+    // append and compact.
     Q("pl_index_versioned", indexUpdateOracleSql)(
       (s, d) => {
         val docs = Tables.load(s, d, "documents")
         val dir = java.nio.file.Files
           .createTempDirectory("graft-minhash-vidx").toString
         Dedup.saveMinhashIndex(minhashGateIndex(s, d), dir)
-        Dedup.versionMinhashIndex(s, dir)
         val day1 = docs.filter(col("doc_id") >= 250 && col("doc_id") < 375)
         val surv1 = Dedup.incrementalMinhashDedup(
           day1, Dedup.loadMinhashIndex(s, dir), "doc_id", "text",
@@ -2193,17 +2188,15 @@ object PipelineQueries {
           .select("day", "doc_id").orderBy("day", "doc_id")
       }),
 
-    // VERSIONED HAMMING lifecycle (round 15): the perceptual-hash
-    // family joins the versioned-gate matrix (MinHash/PQ/BM25 proved
-    // the pattern in r13/r14) — save → version → probe → append →
-    // compact → probe on a SnapshotDir-versioned banded-Hamming index,
-    // with simhash as the 64-bit fingerprint so the whole lifecycle
+    // HAMMING lifecycle (round 15): the perceptual-hash family's
+    // save → probe → append → compact → probe chain on a banded-Hamming
+    // index, with simhash as the 64-bit fingerprint so the whole lifecycle
     // replays in SQL. Planted ` xv1` variants give both days real
     // drops; day 2's variants dup only the APPENDED day-1 survivors,
     // so a silently-lost append fails the gate. Like
     // pl_index_versioned, day-1's survivor plan is deliberately NOT
-    // checkpointed before the compaction — the pinned manifest is what
-    // makes that safe.
+    // checkpointed before the compaction — the pinned snapshot manifest
+    // is what makes that safe.
     Q("pl_hamming_versioned", hammingVersionedOracleSql)(
       (s, d) => {
         val docs = Tables.load(s, d, "documents").select("doc_id", "text")
@@ -2212,7 +2205,6 @@ object PipelineQueries {
         val dir = java.nio.file.Files
           .createTempDirectory("graft-hamming-vidx").toString
         Dedup.saveHammingIndex(hammingGateIndex(s, d), dir)
-        Dedup.versionHammingIndex(s, dir)
         val day1 = sh(docs.filter(col("doc_id") >= 250 && col("doc_id") < 375))
           .unionByName(sh(docs.filter(col("doc_id") < 50)
             .select((col("doc_id") + 10000).as("doc_id"),
@@ -2233,8 +2225,8 @@ object PipelineQueries {
           .select("day", "doc_id").orderBy("day", "doc_id")
       }),
 
-    // TIME TRAVEL (round 14): after the index moves on (append v2,
-    // compact v3), a probe PINNED to the v1 manifest
+    // TIME TRAVEL (round 14): after the index moves on (save v1,
+    // append v2, compact v3), a probe PINNED to the v1 manifest
     // (loadMinhashIndexAt) must reproduce the day-1 result bit-for-bit
     // — the reproducibility story versioning sells: re-run yesterday's
     // dedup decision against yesterday's index state. Day 3 of the
@@ -2246,7 +2238,6 @@ object PipelineQueries {
         val dir = java.nio.file.Files
           .createTempDirectory("graft-minhash-tt").toString
         Dedup.saveMinhashIndex(minhashGateIndex(s, d), dir)
-        Dedup.versionMinhashIndex(s, dir)
         val v1 = SnapshotDir.versions(s, s"$dir/sets").last
         val day1 = docs.filter(col("doc_id") >= 250 && col("doc_id") < 375)
         val surv1 = Dedup.incrementalMinhashDedup(
@@ -2270,20 +2261,20 @@ object PipelineQueries {
           .select("day", "doc_id").orderBy("day", "doc_id")
       }),
 
-    // STREAMING ingest on a VERSIONED MinHash index (round 16): the
+    // STREAMING ingest on a MinHash index (round 16): the
     // pl_bm25_stream_versioned motion for the DEDUP index family — two
     // micro-batches through StreamingDedup.probeBatch (the exposed
     // per-batch body of minhashDedupStream; the probeBatch testing
-    // precedent, no async stream needed) against a SnapshotDir-versioned
-    // index: each batch probes, its survivors append (a manifest-
-    // committed version per append). Then the crash case: batch 2's
-    // append marker is DELETED (a crash between the append and the
-    // marker write) and the batch re-delivered — the replay must
-    // return the SAME survivor set from the committed manifest (never
-    // re-probe: the index already contains these survivors and their
-    // self-matches would wrongly drop them) and its re-append must be
-    // probe-neutral on the versioned dir (set semantics). Day 3 of the
-    // output is that replay; its oracle branch is literally surv2 again.
+    // precedent, no async stream needed): each batch probes, its
+    // survivors append (a manifest-committed version per append). Then
+    // the crash case: batch 2's append marker is DELETED (a crash
+    // between the append and the marker write) and the batch
+    // re-delivered — the replay must return the SAME survivor set from
+    // the committed manifest (never re-probe: the index already contains
+    // these survivors and their self-matches would wrongly drop them)
+    // and its re-append must be probe-neutral (set semantics). Day 3 of
+    // the output is that replay; its oracle branch is literally surv2
+    // again.
     Q("pl_minhash_stream_versioned", indexUpdateOracle(
       "UNION ALL SELECT CAST(3 AS INT) AS day, doc_id FROM surv2"))(
       (s, d) => {
@@ -2293,7 +2284,6 @@ object PipelineQueries {
         val root = java.nio.file.Files
           .createTempDirectory("graft-minhash-svman").toString
         Dedup.saveMinhashIndex(minhashGateIndex(s, d), dir)
-        Dedup.versionMinhashIndex(s, dir)
         val b1 = docs.filter(col("doc_id") >= 250 && col("doc_id") < 375)
         val surv1 = graft.streaming.StreamingDedup.probeBatch(
           b1, dir, root, 0L, "doc_id", "text", threshold = 0.4,
@@ -2319,7 +2309,8 @@ object PipelineQueries {
     // then behave as if they never existed — some batch docs' ONLY
     // near-dup is a deleted doc, so they now SURVIVE where
     // pl_incr_minhash drops them (the non-vacuity teeth). The delete
-    // rewrites sets/ then buckets/ through the crash-safe staged swap.
+    // rewrites sets/ then buckets/ as new snapshot versions, then
+    // expires the older ones.
     Q("pl_index_delete", indexDeleteOracleSql)(
       (s, d) => {
         val docs = Tables.load(s, d, "documents")
@@ -2497,19 +2488,16 @@ object PipelineQueries {
           .orderBy("query_id", "rank")
       }),
 
-    // VERSIONED PQ lifecycle (round 14): pl_ann_pq_update's exact chain
-    // on a SnapshotDir-versioned codes/ table, plus a compaction before
-    // the probe (probe-neutral, so the oracle is shared) — the third
-    // index family with its versioned path oracled end to end
-    // (manifest-committed append + rewrite; BM25 and MinHash are the
-    // other two).
+    // PQ lifecycle with compaction (round 14): pl_ann_pq_update's exact
+    // chain plus a compaction before the probe (probe-neutral, so the
+    // oracle is shared) — a manifest-committed append and rewrite of the
+    // codes/ table oracled end to end.
     Q("pl_ann_pq_versioned", pqUpdateOracleSql)(
       (s, d) => {
         val emb = Tables.load(s, d, "embeddings")
         val dir = java.nio.file.Files
           .createTempDirectory("graft-pq-vidx").toString
         Similarity.savePqIndex(pqGateIndex(s, d), dir)
-        Similarity.versionPqIndex(s, dir)
         val batch = emb.filter(col("vec_id") < 200).select(
           (col("vec_id") + 10000).as("vec_id"),
           reverse(col("embedding")).as("embedding"))
@@ -2542,22 +2530,20 @@ object PipelineQueries {
           .orderBy("query_id", "rank")
       }),
 
-    // VERSIONED IVF-PQ lifecycle (round 15): pl_ann_ivfpq_update's
-    // exact chain on SnapshotDir-versioned tables, plus a compaction
-    // before the probe (probe-neutral — same oracle). With
-    // pl_hamming_versioned this completes the versioned-gate matrix:
-    // every index family whose maintenance verbs route through the
-    // append/rewrite chokepoints now has its versioned path proven
-    // end-to-end under a DuckDB oracle (MinHash r14, BM25 r13/r14,
-    // PQ r14, Hamming + IVF-PQ r15; IVF cells ride the same ivfAssign
-    // codepath IVF-PQ pins here).
+    // IVF-PQ lifecycle with compaction (round 15): pl_ann_ivfpq_update's
+    // exact chain plus a compaction before the probe (probe-neutral —
+    // same oracle). With pl_hamming_versioned this completes the
+    // compaction matrix: every index family whose maintenance verbs
+    // route through the append/rewrite chokepoints has its append and
+    // rewrite proven end-to-end under a DuckDB oracle (MinHash r14,
+    // BM25 r13/r14, PQ r14, Hamming + IVF-PQ r15; IVF cells ride the
+    // same ivfAssign codepath IVF-PQ pins here).
     Q("pl_ann_ivfpq_versioned", ivfPqUpdateOracleSql)(
       (s, d) => {
         val emb = Tables.load(s, d, "embeddings")
         val dir = java.nio.file.Files
           .createTempDirectory("graft-ivfpq-vidx").toString
         Similarity.saveIvfPqIndex(ivfPqGateIndex(s, d), dir)
-        Similarity.versionIvfPqIndex(s, dir)
         val batch = emb.filter(col("vec_id") < 200).select(
           (col("vec_id") + 10000).as("vec_id"),
           when(pmod(col("vec_id"), lit(7)) === 0, col("embedding"))
@@ -2625,20 +2611,18 @@ object PipelineQueries {
           .orderBy("query_id", "rank")
       }),
 
-    // VERSIONED RESIDUAL-IVFADC lifecycle (round 16): the one index
-    // family whose maintenance path wasn't yet proven on a versioned
-    // dir — pl_ann_ivfadc_update's exact chain on SnapshotDir-versioned
-    // tables, plus a compaction before the probe (probe-neutral — same
-    // oracle; the compaction commits a rewrite version the pinned
-    // readers never see). Completes the versioned-gate matrix across
-    // ALL index families: MinHash, BM25, PQ, Hamming, IVF-PQ, IVFADC.
+    // RESIDUAL-IVFADC lifecycle with compaction (round 16):
+    // pl_ann_ivfadc_update's exact chain plus a compaction before the
+    // probe (probe-neutral — same oracle; the compaction commits a
+    // rewrite version the pinned readers never see). Completes the
+    // compaction matrix across ALL index families: MinHash, BM25, PQ,
+    // Hamming, IVF-PQ, IVFADC.
     Q("pl_ann_ivfadc_versioned", ivfAdcUpdateOracleSql)(
       (s, d) => {
         val emb = Tables.load(s, d, "embeddings")
         val dir = java.nio.file.Files
           .createTempDirectory("graft-radc-vidx").toString
         Similarity.saveIvfPqIndex(ivfAdcGateIndex(s, d), dir)
-        Similarity.versionIvfPqIndex(s, dir)
         val batch = emb.filter(col("vec_id") < 200).select(
           (col("vec_id") + 10000).as("vec_id"),
           when(pmod(col("vec_id"), lit(7)) === 0, col("embedding"))
@@ -3807,9 +3791,8 @@ object PipelineQueries {
     // COMPACT → probe. Each probe must score exactly like a from-scratch
     // BM25 over the equivalent corpus — including the idf / length-
     // normalization shifts from the meta statistic deltas the append and
-    // delete recorded. Day-0/1 probes materialize before the delete's
-    // staged rewrite invalidates their pinned file snapshots (the same
-    // open-reader discipline as pl_index_update).
+    // delete recorded. Day-0/1 probes materialize before the delete,
+    // which expires the older snapshot versions their plans read.
     Q("pl_bm25_index", bm25IndexOracleSql)(
       (s, d) => {
         val docs = Tables.load(s, d, "documents")
@@ -3837,22 +3820,14 @@ object PipelineQueries {
           .select("day", "rank", "doc_id", "score")
           .orderBy("day", "rank")
       }),
-    // VERSIONED index lifecycle (round 13): the identical
-    // build→probe→append→probe→delete→compact→probe cycle as
-    // pl_bm25_index, run on a SnapshotDir-VERSIONED index —
-    // manifest-committed appends/rewrites instead of dir mutation +
-    // staged swaps — under the SAME oracle: versioning must be
-    // semantics-neutral across the full maintenance surface (append
-    // segments, the delete's rewrite, the compaction, the meta-ledger
-    // recount). What it buys beyond the plain form — pinned readers
-    // surviving maintenance, crash-anywhere manifest commits — is
-    // pinned by SnapshotDirSpec; this gate pins that it changes NO
-    // query result. Round 14: a FOURTH probe lands BETWEEN the delete
-    // and the compaction — the window where a versioned index's meta
-    // delta must already be manifest-committed (the round-13 delete
-    // wrote it as an uncommitted orphan, so this probe scored with
-    // stale pre-delete n_docs/total_dl; the oracle's day-2 state is
-    // the post-delete corpus, so a stale-meta probe hash-mismatches).
+    // BM25 lifecycle with a probe in the delete→compact window (round
+    // 13): the identical build→probe→append→probe→delete→compact→probe
+    // cycle as pl_bm25_index, plus a FOURTH probe BETWEEN the delete and
+    // the compaction — the window where the delete's meta delta must
+    // already be manifest-committed (the round-13 delete wrote it as an
+    // uncommitted orphan, so this probe scored with stale pre-delete
+    // n_docs/total_dl; the oracle's day-2 state is the post-delete
+    // corpus, so a stale-meta probe hash-mismatches).
     Q("pl_bm25_versioned", bm25LifecycleOracleSql(Seq(
       "doc_id < 250", "doc_id < 375",
       "doc_id < 375 AND doc_id % 5 <> 0",
@@ -3864,7 +3839,6 @@ object PipelineQueries {
         val terms = Seq("table", "query", "spark")
         val (p250, l250) = bm25GateRows(docs.filter(col("doc_id") < 250))
         Retrieval.saveBm25IndexRows(p250, l250, dir)
-        Retrieval.versionBm25Index(s, dir)
         val day0 = Retrieval.bm25Probe(
           Retrieval.loadBm25Index(s, dir), terms, 15).localCheckpoint()
         Retrieval.appendToBm25Index(
@@ -3906,7 +3880,6 @@ object PipelineQueries {
         val terms = Seq("table", "query", "spark")
         val (p250, l250) = bm25GateRows(docs.filter(col("doc_id") < 250))
         Retrieval.saveBm25IndexRows(p250, l250, dir)
-        Retrieval.versionBm25Index(s, dir)
         val v1 = SnapshotDir.versions(s, s"$dir/lens").last
         val day0 = Retrieval.bm25Probe(
           Retrieval.loadBm25Index(s, dir), terms, 15).localCheckpoint()
@@ -3924,15 +3897,14 @@ object PipelineQueries {
           .orderBy("day", "rank")
       }),
 
-    // STREAMING ingest on a VERSIONED BM25 index (round 15): two
-    // micro-batches through bm25IndexBatch — the exposed per-batch body
-    // of bm25IndexStream (the probeBatch testing precedent; no async
-    // stream needed) — against a SnapshotDir-versioned dir, probing
-    // after each. Then the crash case the composition exists for:
-    // batch 1's append marker is DELETED (simulating a crash between
-    // the append and the marker write) and the batch re-delivered —
-    // repair-then-append must net the landed rows out of the VERSIONED
-    // index (manifest-committed rewrites), recount meta from lens/, and
+    // STREAMING ingest on a BM25 index (round 15): two micro-batches
+    // through bm25IndexBatch — the exposed per-batch body of
+    // bm25IndexStream (the probeBatch testing precedent; no async stream
+    // needed) — probing after each. Then the crash case the composition
+    // exists for: batch 1's append marker is DELETED (simulating a crash
+    // between the append and the marker write) and the batch re-delivered —
+    // repair-then-append must net the landed rows out of the index
+    // (manifest-committed rewrites), recount meta from lens/, and
     // re-append exactly once, so the day-2 probe is bit-identical to
     // day 1 (the oracle's day-2 state is literally day 1's corpus
     // again). Closes the last ungated composition of the index stack.
@@ -3947,7 +3919,6 @@ object PipelineQueries {
         val terms = Seq("table", "query", "spark")
         val (p250, l250) = bm25GateRows(docs.filter(col("doc_id") < 250))
         Retrieval.saveBm25IndexRows(p250, l250, dir)
-        Retrieval.versionBm25Index(s, dir)
         graft.streaming.StreamingDedup.bm25IndexBatch(
           docs.filter(col("doc_id") >= 250 && col("doc_id") < 325),
           dir, root, 0L, "doc_id", "text")

@@ -501,13 +501,7 @@ object QueryServer {
     val port = sys.env.getOrElse("SPARK_GRAFT_PORT", "8580").toInt
     val host = sys.env.getOrElse("SPARK_GRAFT_BIND", "127.0.0.1")
     val allowRaw = sys.env.get("SPARK_GRAFT_ALLOW_RAW").contains("1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSpark.session()
     val cat = Catalog.forTestData(spark, sfDir)
     // with status tracking enabled, the status table is itself queryable
     val statusDir = sys.env.get("SPARK_GRAFT_STATUS_DIR")

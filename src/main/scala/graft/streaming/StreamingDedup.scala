@@ -17,26 +17,23 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * further apart than the horizon are caught by the periodic batch
   * `exactDupGroups` compaction pass — the standard lambda split.
   *
-  * INDEX MAINTENANCE vs A LIVE STREAM (round 13, the shared contract of
-  * every index-backed stream here — minhash, hamming, semantic/IVF,
-  * BM25): every micro-batch loads the index FRESH (a metadata-only file
-  * listing), so a retention DELETE or a compaction run BETWEEN
+  * INDEX MAINTENANCE vs A LIVE STREAM (the shared contract of every
+  * index-backed stream here — minhash, hamming, semantic/IVF, BM25):
+  * every micro-batch loads the index FRESH (a metadata-only manifest
+  * read), so a retention DELETE or a compaction run BETWEEN
   * micro-batches propagates into the very next probe — no restart
-  * needed (StreamingDedupSpec pins the semantic-delete case). What is
-  * NOT safe is maintenance racing a micro-batch that is mid-probe: the
-  * staged-swap rewrite can retire the file snapshot that batch pinned
-  * (FILE_NOT_EXIST mid-job — the same hazard the batch compaction docs
-  * name), and a load inside the swap's two-rename window can steal its
-  * roll-forward. QUIESCE RULE: pause the stream (or schedule
-  * maintenance between triggers — with a processing-time trigger, any
-  * gap longer than a micro-batch) before delete/compact, then resume.
-  * The manifest protocol is unaffected either way: it keys on batchId
-  * and ids, not file sets, so a replay across a maintenance boundary
-  * still rebuilds its committed survivor set. Indexes opted into
-  * [[graft.functions.SnapshotDir]] versioning (round 13) do not need
-  * the quiesce at all: maintenance there never deletes a committed
-  * file (within gc retention), so a mid-probe micro-batch keeps its
-  * pinned snapshot through any delete/compact.
+  * needed (StreamingDedupSpec pins the semantic-delete case). Every
+  * index table is [[graft.functions.SnapshotDir]]-versioned, so
+  * appends and compactions never delete a file a mid-probe micro-batch
+  * pinned: they may run while a batch is in flight. QUIESCE RULE, for
+  * DELETES only: a delete expires every older version of the tables it
+  * rewrites (the deleted rows must leave the disk), so a micro-batch
+  * that pinned one of them fails mid-job with a missing file. Pause the
+  * stream (or schedule the delete between triggers — with a
+  * processing-time trigger, any gap longer than a micro-batch) before
+  * deleting, then resume. The manifest protocol is unaffected either
+  * way: it keys on batchId and ids, not file sets, so a replay across
+  * a maintenance boundary still rebuilds its committed survivor set.
   */
 object StreamingDedup {
 
@@ -71,7 +68,7 @@ object StreamingDedup {
     * stream-stream anti-join no streaming planner accepts), and the
     * micro-batch boundary makes them legal — the same pattern lakehouse
     * MERGE sinks use. Index reload per micro-batch is metadata-only (a
-    * file listing + a one-row meta read).
+    * manifest read + a one-row meta read).
     *
     * REPLAY SAFETY (Structured Streaming re-executes a micro-batch after
     * a sink failure or a crash before the batch commits): a re-executed

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Measurement aid (guide §1): runs ONE registry query through the noop
   * sink with a SparkListener attached and prints every Spark job's wall
@@ -15,14 +14,7 @@ object JobProfile {
     val sfDir = args(0)
     val name = args(1)
     val repeats = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSpark.session()
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()
     var tasksByJob = scala.collection.concurrent.TrieMap.empty[Int, Int]
     val stageToJob = scala.collection.concurrent.TrieMap.empty[Int, Int]

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc profiling main: for each named registry query, splits wall time
   * into compile (DataFrame construction, incl. KQL parse + catalog) and
   * execute (noop-sink write), over N repeats. Usage:
@@ -11,14 +9,7 @@ import org.apache.spark.sql.SparkSession
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSpark.session()
     val registry = graft.SparkEntry.queries
     if (args(1) == "explain") {
       // one JVM, many plans: `explain q1 q2 …` writes each query's

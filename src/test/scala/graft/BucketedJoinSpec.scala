@@ -270,8 +270,8 @@ class BucketedJoinSpec extends AnyFunSuite {
       Retrieval.saveBm25IndexBucketed(corpus, "doc_id", "text",
         "bm25_idxv", dir, nBuckets = 8)
       // the data tables are catalog-owned; the meta delta ledger is an
-      // ordinary dir a user may version independently
-      SnapshotDir.enable(spark, s"$dir/meta")
+      // ordinary table, versioned from the save on
+      assert(SnapshotDir.versions(spark, s"$dir/meta") == Seq(1L))
       Retrieval.appendToBm25IndexBucketed(
         batch, "doc_id", "text", "bm25_idxv", dir)
       // the delta must be MANIFEST-visible, not a raw-append orphan a

@@ -316,8 +316,7 @@ class PipelineSpec extends AnyFunSuite {
     // COMPACTION: appends accumulate small files; compacting rewrites
     // each table to the requested file count and probe output is
     // unchanged
-    def nFiles(d: String) = new java.io.File(d).listFiles()
-      .count(_.getName.endsWith(".parquet"))
+    def nFiles(d: String) = Dedup.snapshotFiles(spark, d).size
     assert(nFiles(s"$dir/sets") > 1, "append must have added files")
     Dedup.compactMinhashIndex(spark, dir, numFiles = 1)
     assert(nFiles(s"$dir/sets") == 1 && nFiles(s"$dir/buckets") == 1,
@@ -377,9 +376,13 @@ class PipelineSpec extends AnyFunSuite {
     assert(probe() == Set(10L, 11L),
       "after deletion the suppressed doc must survive")
     // ...and the content is physically GONE from both tables
-    assert(spark.read.parquet(s"$dir/sets")
+    // (read recursively: the rewritten files live in snapshot segment
+    // subdirectories, and every file under the table dir must be clean)
+    assert(spark.read.option("recursiveFileLookup", "true")
+      .parquet(s"$dir/sets")
       .filter(col("__cid") === 0L).count() == 0, "sets row must be gone")
-    assert(spark.read.parquet(s"$dir/buckets")
+    assert(spark.read.option("recursiveFileLookup", "true")
+      .parquet(s"$dir/buckets")
       .filter(col("__cid") === 0L).count() == 0, "band tuples must be gone")
   }
 
@@ -402,6 +405,10 @@ class PipelineSpec extends AnyFunSuite {
     Dedup.deleteFromHammingIndex(spark, hdir,
       Seq(0x00000000000000FFL).toDF("h"))
     assert(hprobe() == 1L, "deleted fingerprint must stop suppressing")
+    // a delete expires the older versions: no file holds the hash
+    assert(spark.read.option("recursiveFileLookup", "true")
+      .parquet(s"$hdir/buckets")
+      .filter(col("__ch") === 0x00000000000000FFL).count() == 0)
     // IVF: deleting the near corpus vector un-suppresses the batch one
     val vc = Seq((0L, Seq(1f, 0f, 0f, 0f)), (1L, Seq(0f, 1f, 0f, 0f)))
       .toDF("id", "vec")
@@ -416,6 +423,9 @@ class PipelineSpec extends AnyFunSuite {
     assert(vprobe() == 0L)
     Similarity.deleteFromIvfIndex(spark, vdir, Seq(0L).toDF("id"))
     assert(vprobe() == 1L, "deleted vector must stop suppressing")
+    assert(spark.read.option("recursiveFileLookup", "true")
+      .parquet(s"$vdir/cells")
+      .filter(col("neighbor_id") === 0L).count() == 0)
     // PQ: deleted ids drop out of the ADC ranking
     val emb = spark.read.parquet(s"${TestSpark.sf}/embeddings.parquet")
     val corpus = emb.filter(col("vec_id") < 100)
@@ -430,6 +440,24 @@ class PipelineSpec extends AnyFunSuite {
       .collect().map(_.getLong(2))
     assert(ranked.nonEmpty && ranked.forall(_ >= 50),
       s"deleted codes must never rank: ${ranked.toSeq}")
+    assert(spark.read.option("recursiveFileLookup", "true")
+      .parquet(s"$pdir/codes")
+      .filter(col("neighbor_id") < 50).count() == 0)
+    // IVF-PQ: the same per-vector rewrite and expiry on cellcodes/
+    val ipdir = java.nio.file.Files
+      .createTempDirectory("graft-del-ipidx").toString
+    Similarity.saveIvfPqIndex(Similarity.ivfPqIndex(
+      corpus, "vec_id", "embedding", nCells = 4), ipdir)
+    Similarity.deleteFromIvfPqIndex(spark, ipdir,
+      spark.range(50).toDF("vec_id"))
+    val ipRanked = Similarity.ivfPqTopK(emb.filter(col("vec_id") < 2),
+      Similarity.loadIvfPqIndex(spark, ipdir), "vec_id", "embedding", 10,
+      nProbe = 4).collect().map(_.getLong(2))
+    assert(ipRanked.nonEmpty && ipRanked.forall(_ >= 50),
+      s"deleted codes must never rank: ${ipRanked.toSeq}")
+    assert(spark.read.option("recursiveFileLookup", "true")
+      .parquet(s"$ipdir/cellcodes")
+      .filter(col("neighbor_id") < 50).count() == 0)
   }
 
   test("residual ivfadc index lifecycle: self-describing flag, frozen-" +
@@ -825,7 +853,6 @@ class PipelineSpec extends AnyFunSuite {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-nb-lockstep").toString + "/m"
     TextAnalysis.saveNbModel(m, dir)
-    TextAnalysis.versionNbModel(spark, dir)
     // healthy registry loads fine
     assert(TextAnalysis.loadNbModel(spark, dir)
       .classRows.map(_._1).toSeq == Seq("x", "y"))

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{Retrieval, TextAnalysis}
+import graft.functions.{Dedup, Retrieval, TextAnalysis}
 
 /** The persisted BM25 index's lifecycle contract: every probe of the
   * index must score EXACTLY (bit-for-bit doubles) like a from-scratch
@@ -63,11 +63,17 @@ class RetrievalIndexSpec extends AnyFunSuite {
       .filter(!col("doc_id").isin(2L, 4L)))
     assert(probeRows(dir) == want)
     assert(!probeRows(dir).exists(r => r._1 == 2L || r._1 == 4L))
+    // the delete expires the older versions: no file holds a deleted doc
+    for (t <- Seq("postings", "lens"))
+      assert(spark.read.option("recursiveFileLookup", "true")
+        .parquet(s"$dir/$t")
+        .filter(col("doc_id").isin(2L, 4L)).count() == 0L, t)
     // compaction collapses the four meta delta rows (save, append,
     // delete, and the collapse target) to one and changes nothing
     Retrieval.compactBm25Index(spark, dir, numFiles = 1)
     assert(probeRows(dir) == want)
-    assert(spark.read.parquet(s"$dir/meta").count() == 1L)
+    assert(spark.read.parquet(Dedup.snapshotFiles(spark, s"$dir/meta"): _*)
+      .count() == 1L)
     val idx = Retrieval.loadBm25Index(spark, dir)
     assert(idx.nDocs == 5L) // 7 docs minus 2 deleted
   }
@@ -91,9 +97,10 @@ class RetrievalIndexSpec extends AnyFunSuite {
     Retrieval.saveBm25Index(corpus, "doc_id", "text", dir)
     val want = directRows(corpus)
     assert(probeRows(dir) == want)
-    Seq((5L, 40L, Option.empty[Double], Option.empty[Double]))
-      .toDF("n_docs_delta", "total_dl_delta", "k1", "b")
-      .coalesce(1).write.mode("append").parquet(s"$dir/meta")
+    Dedup.appendParquet(
+      Seq((5L, 40L, Option.empty[Double], Option.empty[Double]))
+        .toDF("n_docs_delta", "total_dl_delta", "k1", "b").coalesce(1),
+      s"$dir/meta")
     assert(probeRows(dir) != want, "drifted stats must actually drift")
     Retrieval.compactBm25Index(spark, dir, numFiles = 1)
     assert(probeRows(dir) == want,
@@ -138,7 +145,7 @@ class RetrievalIndexSpec extends AnyFunSuite {
     Retrieval.appendToBm25Index(batch, "doc_id", "text", dir,
       skipExisting = true)
     assert(probeRows(dir) == want, "a re-delivered batch must be a no-op")
-    assert(spark.read.parquet(s"$dir/lens")
+    assert(spark.read.parquet(Dedup.snapshotFiles(spark, s"$dir/lens"): _*)
       .where(col("doc_id") === 6L).count() == 1L)
     // partial overlap: only the genuinely new doc lands
     val mixed = Seq(
@@ -151,7 +158,7 @@ class RetrievalIndexSpec extends AnyFunSuite {
     // and WITHOUT the guard the same misuse really does double-count
     // (the documented contract the flag exists to prevent)
     Retrieval.appendToBm25Index(batch, "doc_id", "text", dir)
-    assert(spark.read.parquet(s"$dir/lens")
+    assert(spark.read.parquet(Dedup.snapshotFiles(spark, s"$dir/lens"): _*)
       .where(col("doc_id") === 6L).count() == 2L)
   }
 
@@ -171,11 +178,10 @@ class RetrievalIndexSpec extends AnyFunSuite {
     val dir2 = java.nio.file.Files
       .createTempDirectory("graft-bm25-spec").toString
     Retrieval.saveBm25Index(corpus, "doc_id", "text", dir2)
-    import graft.functions.Dedup
     val legacy = Seq((5L, 40L, Option.empty[Double], Option.empty[Double]))
       .toDF("n_docs_delta", "total_dl_delta", "k1", "b")
     // overwrite meta with a null-only ledger
-    legacy.coalesce(1).write.mode("overwrite").parquet(s"$dir2/meta")
+    Dedup.overwriteParquet(legacy, s"$dir2/meta", numFiles = 1)
     val e = intercept[IllegalArgumentException] {
       Retrieval.loadBm25Index(spark, dir2)
     }

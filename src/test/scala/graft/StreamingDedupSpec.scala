@@ -123,7 +123,8 @@ class StreamingDedupSpec extends AnyFunSuite {
       "a replayed batch must re-emit its committed survivors")
     // and the replay did not double the appended index rows (the append
     // marker short-circuits the second append)
-    val setRows = TestSpark.spark.read.parquet(s"$dir/sets")
+    val setRows = TestSpark.spark.read.parquet(graft.functions.Dedup
+      .snapshotFiles(TestSpark.spark, s"$dir/sets"): _*)
       .where(org.apache.spark.sql.functions.col("__cid") === 11L).count()
     assert(setRows == 1L, s"survivor appended exactly once: $setRows")
     // A FRESH run (new checkpoint lineage → new manifest root) with the
@@ -178,7 +179,8 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(run() == Set(31L))
     assert(run() == Set(31L),
       "a replayed media batch must re-emit its committed survivors")
-    val bucketRows = TestSpark.spark.read.parquet(s"$dir/buckets")
+    val bucketRows = TestSpark.spark.read.parquet(graft.functions.Dedup
+      .snapshotFiles(TestSpark.spark, s"$dir/buckets"): _*)
       .where(org.apache.spark.sql.functions.col("__ch") === 0x5A5A5A5A5A5A5A5AL)
       .count()
     assert(bucketRows == 8L, s"survivor banded exactly once (8 bands): " +
@@ -227,7 +229,8 @@ class StreamingDedupSpec extends AnyFunSuite {
     assert(run() == Set(30L))
     assert(run() == Set(30L),
       "a replayed embedding batch must re-emit its committed survivors")
-    val cellRows = TestSpark.spark.read.parquet(s"$dir/cells")
+    val cellRows = TestSpark.spark.read.parquet(graft.functions.Dedup
+      .snapshotFiles(TestSpark.spark, s"$dir/cells"): _*)
       .where(org.apache.spark.sql.functions.col("neighbor_id") === 30L)
       .count()
     assert(cellRows == 1L, s"survivor appended exactly once: $cellRows")
@@ -286,7 +289,8 @@ class StreamingDedupSpec extends AnyFunSuite {
     runB1()
     assert(probe() == want,
       "a mid-append replay must not double-count the batch")
-    assert(spark.read.parquet(s"$dir/lens")
+    assert(spark.read
+      .parquet(graft.functions.Dedup.snapshotFiles(spark, s"$dir/lens"): _*)
       .where(org.apache.spark.sql.functions.col("doc_id") === 3L)
       .count() == 1L, "exactly one lens row per replayed doc")
     // crash BEFORE the append (manifest committed, nothing landed): the
@@ -315,7 +319,6 @@ class StreamingDedupSpec extends AnyFunSuite {
       (4L, "storage formats for columnar data")).toDF("doc_id", "text")
     val dir = tmp("graft-bm25-vstream-idx")
     Retrieval.saveBm25Index(b0, "doc_id", "text", dir)
-    Retrieval.versionBm25Index(spark, dir)
     val root = tmp("graft-bm25-vstream-ckpt") + "/graft_batches"
     def runB1() = StreamingDedup.bm25IndexBatch(
       b1, dir, root, batchId = 3L, "doc_id", "text")
@@ -329,20 +332,20 @@ class StreamingDedupSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(probe() == want)
     // crash-simulating replay (marker lost): the repair's landed probe,
-    // delete rewrites, and meta recount all flow through the versioned
-    // chokepoints — the batch still lands exactly once
+    // delete rewrites, and meta recount all commit snapshot versions —
+    // the batch still lands exactly once
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$root/appended-3"), false)
     runB1()
     assert(probe() == want,
-      "a mid-append replay on a versioned index must not double-count")
+      "a mid-append replay must not double-count")
     assert(spark.read
       .parquet(graft.functions.Dedup.snapshotFiles(spark, s"$dir/lens"): _*)
       .where(org.apache.spark.sql.functions.col("doc_id") === 3L)
       .count() == 1L)
-    // maintenance mid-stream needs no quiesce on a versioned index: a
-    // pinned pre-compaction load keeps materializing afterwards
+    // compaction mid-stream needs no quiesce: a pinned pre-compaction
+    // load keeps materializing afterwards
     val pinned = Retrieval.loadBm25Index(spark, dir)
     Retrieval.compactBm25Index(spark, dir, numFiles = 1)
     assert(pinned.lens.count() == 4L,
@@ -364,7 +367,7 @@ class StreamingDedupSpec extends AnyFunSuite {
       "doc_id", "text", terms, 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(probe() == wantPostDelete,
-      "a versioned delete's statistics must be visible before compaction")
+      "a delete's statistics must be visible before compaction")
   }
 
   test("semantic stream: a retention DELETE between micro-batches " +

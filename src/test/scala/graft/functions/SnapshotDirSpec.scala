@@ -4,14 +4,14 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Manifest-committed snapshot versioning ([[SnapshotDir]]) — the
-  * round-13 opt-in upgrade of the plain-parquet index dirs. What it must
-  * buy (and what these tests pin): a reader pinned BEFORE maintenance
-  * keeps materializing AFTER it (the plain form's documented
-  * FILE_NOT_EXIST limitation), uncommitted data files are invisible
-  * (crash-anywhere safety without a swap protocol), probe results are
-  * identical to the plain form across the whole lifecycle, and gc
-  * reclaims everything no kept version references.
+/** Manifest-committed snapshot versioning ([[SnapshotDir]]) — the one
+  * on-disk format of every persisted index and model table. What it must
+  * buy (and what these tests pin): a reader pinned BEFORE an append or
+  * compaction keeps materializing AFTER it, uncommitted data files are
+  * invisible (crash-anywhere safety without a swap protocol), probe
+  * results equal the direct operators across the whole lifecycle, a
+  * delete leaves no deleted row on disk, and gc reclaims everything no
+  * kept version references.
   */
 class SnapshotDirSpec extends AnyFunSuite {
   import graft.TestSpark.spark
@@ -26,10 +26,8 @@ class SnapshotDirSpec extends AnyFunSuite {
   test("versioned lifecycle: append/rewrite commit new versions; a " +
       "pinned pre-compaction reader survives the compaction") {
     val dir = tmp("graft-snap") + "/t"
-    (0L until 50L).toDF("id").repartition(2)
-      .write.mode("overwrite").parquet(dir)
-    SnapshotDir.enable(spark, dir)
-    // v1 pins the two original files
+    Dedup.saveParquet((0L until 50L).toDF("id").repartition(2), dir)
+    // v1 pins the two saved files
     val v1 = Dedup.snapshotFiles(spark, dir)
     assert(v1.size == 2)
     // append lands in a segment + new manifest; a fresh load sees it
@@ -39,8 +37,8 @@ class SnapshotDirSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSet
     assert(afterAppend == (0L until 60L).toSet)
     // the headline: pin a reader, compact UNDER it, reader still works
-    // (the plain-parquet form fails here with FILE_NOT_EXIST — the
-    // documented limitation this layer removes)
+    // (a compaction that swapped the directory in place would fail it
+    // with FILE_NOT_EXIST)
     val pinned = spark.read.parquet(Dedup.snapshotFiles(spark, dir): _*)
     Dedup.compactParquetDir(spark, dir, numFiles = 1)
     assert(pinned.count() == 60L,
@@ -57,8 +55,7 @@ class SnapshotDirSpec extends AnyFunSuite {
   test("uncommitted segment files are invisible — crash between data " +
       "write and manifest commit loses nothing and breaks nothing") {
     val dir = tmp("graft-snap") + "/t"
-    (0L until 20L).toDF("id").write.mode("overwrite").parquet(dir)
-    SnapshotDir.enable(spark, dir)
+    Dedup.saveParquet((0L until 20L).toDF("id"), dir)
     // simulate the crash: a segment written WITHOUT its manifest commit
     (100L until 110L).toDF("id")
       .write.mode("overwrite").parquet(s"$dir/seg-orphan")
@@ -76,9 +73,7 @@ class SnapshotDirSpec extends AnyFunSuite {
 
   test("gc keeps the newest versions and deletes expired files") {
     val dir = tmp("graft-snap") + "/t"
-    (0L until 10L).toDF("id").coalesce(1)
-      .write.mode("overwrite").parquet(dir)
-    SnapshotDir.enable(spark, dir)
+    Dedup.saveParquet((0L until 10L).toDF("id").coalesce(1), dir)    // v1
     Dedup.appendParquet((10L until 20L).toDF("id").coalesce(1), dir) // v2
     Dedup.compactParquetDir(spark, dir, 1)                           // v3
     // three manifests; the original root file + v2 segment are now only
@@ -96,8 +91,8 @@ class SnapshotDirSpec extends AnyFunSuite {
     assert(rootParquet.isEmpty, "expired root files must be reclaimed")
   }
 
-  test("a versioned BM25 index probes identically through the whole " +
-      "lifecycle, and its pinned reader survives the delete rewrite") {
+  test("a BM25 index probes identically through the whole lifecycle, " +
+      "and a reader pinned after the delete survives the compaction") {
     import graft.functions.{Retrieval, TextAnalysis}
     val corpus = Seq(
       (1L, "spark query engine runs a table scan over the table"),
@@ -110,7 +105,6 @@ class SnapshotDirSpec extends AnyFunSuite {
     val terms = Seq("table", "query", "spark")
     val dir = tmp("graft-snap-bm25")
     Retrieval.saveBm25Index(corpus, "doc_id", "text", dir)
-    Retrieval.versionBm25Index(spark, dir)
     Retrieval.appendToBm25Index(batch, "doc_id", "text", dir)
     def probe() = Retrieval.bm25Probe(
       Retrieval.loadBm25Index(spark, dir), terms, 10)
@@ -119,24 +113,23 @@ class SnapshotDirSpec extends AnyFunSuite {
       TextAnalysis.bm25(docs, "doc_id", "text", terms, 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(probe() == direct(corpus.unionByName(batch)))
-    // pin a pre-delete index; delete + compact under it
-    val pinnedIdx = Retrieval.loadBm25Index(spark, dir)
+    // the delete expires every older version (its rows must leave the
+    // disk), so the reader is pinned AFTER it; compact under that reader
     Retrieval.deleteFromBm25Index(spark, dir,
       Seq(2L).toDF("doc_id"), numFiles = 1)
+    val pinnedIdx = Retrieval.loadBm25Index(spark, dir)
     Retrieval.compactBm25Index(spark, dir, numFiles = 1)
     assert(probe() == direct(corpus.unionByName(batch)
       .filter(col("doc_id") =!= 2L)))
     // the pinned snapshot still materializes its OWN version's rows
-    assert(pinnedIdx.lens.count() == 6L,
-      "a pinned pre-delete reader must survive the rewrites")
+    assert(pinnedIdx.lens.count() == 5L,
+      "a reader pinned before the compaction must survive it")
   }
 
   test("time travel: any committed version reads back exactly, until " +
       "gc expires it") {
     val dir = tmp("graft-snap") + "/t"
-    (0L until 10L).toDF("id").coalesce(1)
-      .write.mode("overwrite").parquet(dir)
-    SnapshotDir.enable(spark, dir)                                  // v1
+    Dedup.saveParquet((0L until 10L).toDF("id").coalesce(1), dir)    // v1
     Dedup.appendParquet((10L until 20L).toDF("id").coalesce(1), dir) // v2
     Dedup.rewriteParquetDir(spark, dir, 1)(_.filter(col("id") < 5)) // v3
     assert(SnapshotDir.versions(spark, dir) == Seq(1L, 2L, 3L))
@@ -155,9 +148,7 @@ class SnapshotDirSpec extends AnyFunSuite {
 
   test("gc sweeps stale staged manifests left by a crashed commit") {
     val dir = tmp("graft-snap") + "/t"
-    (0L until 5L).toDF("id").coalesce(1)
-      .write.mode("overwrite").parquet(dir)
-    SnapshotDir.enable(spark, dir)
+    Dedup.saveParquet((0L until 5L).toDF("id").coalesce(1), dir)
     // a commit that died between temp-write and rename leaves this
     val stale = new Path(s"$dir/_manifests/.tmp-v000000000099-dead")
     fs.create(stale, true).close()
@@ -172,7 +163,9 @@ class SnapshotDirSpec extends AnyFunSuite {
   test("versioned-from-birth: empty v1 is append-first — a load before " +
       "the first append fails loudly by name, after it reads the batch") {
     val dir = tmp("graft-snap") + "/t"
-    SnapshotDir.enable(spark, dir) // absent dir ⇒ empty v1
+    // the state an append onto an absent dir passes through (and stays
+    // in if it crashes before its segment commits): an empty v1
+    SnapshotDir.enable(spark, dir)
     val e = intercept[IllegalArgumentException] {
       Dedup.snapshotFiles(spark, dir)
     }
@@ -200,13 +193,13 @@ class SnapshotDirSpec extends AnyFunSuite {
       emb.filter(col("vec_id") < 100), "vec_id", "embedding",
       k = 4, sweeps = 2)
     Similarity.saveKmeansModel(spark, m1, dir)
-    Similarity.versionKmeansModel(spark, dir)
     // v2: a retrain on different data REPLACES the model
     val m2 = Similarity.kmeansTrain(
       emb.filter(col("vec_id") >= 100), "vec_id", "embedding",
       k = 4, sweeps = 2)
     Similarity.saveKmeansModel(spark, m2, dir)
-    assert(SnapshotDir.versions(spark, dir).size == 2)
+    assert(SnapshotDir.versions(spark, dir) == Seq(1L, 2L),
+      "the first save commits v1, the retrain v2")
     val v1 = SnapshotDir.versions(spark, dir).head
     assert(Similarity.loadKmeansModel(spark, dir).map(_.toSeq).toSeq ==
       m2.map(_.toSeq).toSeq, "latest load must be the retrain")
@@ -219,7 +212,6 @@ class SnapshotDirSpec extends AnyFunSuite {
     val nb1 = TextAnalysis.nbTrain(
       docs.filter(col("doc_id") < 150), "source", "text")
     TextAnalysis.saveNbModel(nb1, nbDir)
-    TextAnalysis.versionNbModel(spark, nbDir)
     TextAnalysis.saveNbModel(TextAnalysis.nbTrain(
       docs.filter(col("doc_id") >= 150 && col("doc_id") < 300),
       "source", "text"), nbDir)
@@ -239,7 +231,6 @@ class SnapshotDirSpec extends AnyFunSuite {
     val c1 = Similarity.centroidTrain(
       emb.filter(col("vec_id") < 150), "embedding", "label")
     Similarity.saveCentroidModel(spark, c1, cDir)
-    Similarity.versionCentroidModel(spark, cDir)
     val c2 = Similarity.centroidTrain(
       emb.filter(col("vec_id") >= 150 && col("vec_id") < 300),
       "embedding", "label")
@@ -262,9 +253,7 @@ class SnapshotDirSpec extends AnyFunSuite {
       "expired version fails on materialization — size keepVersions to " +
       "cover the longest reader") {
     val dir = tmp("graft-snap") + "/t"
-    (0L until 10L).toDF("id").coalesce(1)
-      .write.mode("overwrite").parquet(dir)
-    SnapshotDir.enable(spark, dir)                                   // v1
+    Dedup.saveParquet((0L until 10L).toDF("id").coalesce(1), dir)    // v1
     val pinnedV1 = spark.read.parquet(Dedup.snapshotFiles(spark, dir): _*)
     Dedup.rewriteParquetDir(spark, dir, 1)(_.filter(col("id") < 3)) // v2
     assert(pinnedV1.count() == 10L,
@@ -288,12 +277,14 @@ class SnapshotDirSpec extends AnyFunSuite {
     assert(tt.getMessage.contains("expired"), tt.getMessage)
   }
 
-  test("every index family's version helper names the right tables: " +
-      "versioned probe == plain probe after an append") {
-    // each family: build twin indexes (plain + versioned), append the
-    // same batch to both, probe both — identical results prove the
-    // helper enabled the tables its appends actually write (a typo'd
-    // subdir would leave the versioned twin missing the appended rows)
+  test("each family's save versions the tables its appends write") {
+    // each family: save, append one batch, then every data table the
+    // append writes must hold exactly the save's v1 and the append's v2,
+    // and the loaded probe must equal the direct in-memory operator over
+    // corpus + batch (a table the save left unversioned would fail the
+    // append or drop the appended rows)
+    def versioned(dirs: String*): Unit = dirs.foreach(d =>
+      assert(SnapshotDir.versions(spark, d) == Seq(1L, 2L), d))
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "eta theta iota kappa lambda mu")).toDF("doc_id", "text")
@@ -302,54 +293,160 @@ class SnapshotDirSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
 
     // MinHash
-    val (mhP, mhV) = (tmp("sv-mh-p"), tmp("sv-mh-v"))
-    for (d <- Seq(mhP, mhV))
-      Dedup.saveMinhashIndex(
-        Dedup.minhashIndex(docs, "doc_id", "text", 3, 16, 4), d)
-    Dedup.versionMinhashIndex(spark, mhV)
-    for (d <- Seq(mhP, mhV))
-      Dedup.appendToMinhashIndex(spark, d, batch, "doc_id", "text")
-    def mhProbe(d: String) = Dedup.incrementalMinhashDedup(
+    val mh = Dedup.minhashIndex(docs, "doc_id", "text", 3, 16, 4)
+    val mhDir = tmp("sv-mh")
+    Dedup.saveMinhashIndex(mh, mhDir)
+    Dedup.appendToMinhashIndex(spark, mhDir, batch, "doc_id", "text")
+    versioned(s"$mhDir/sets", s"$mhDir/buckets")
+    def mhProbe(i: Dedup.MinhashIndex) = Dedup.incrementalMinhashDedup(
       Seq((9L, "alpha beta gamma delta epsilon zeta eta theta"))
-        .toDF("doc_id", "text"),
-      Dedup.loadMinhashIndex(spark, d), "doc_id", "text", 0.5)
+        .toDF("doc_id", "text"), i, "doc_id", "text", 0.5)
       .collect().map(_.getLong(0)).toSet
-    assert(mhProbe(mhV) == mhProbe(mhP))
-    assert(SnapshotDir.isVersioned(spark, s"$mhV/sets") &&
-      SnapshotDir.isVersioned(spark, s"$mhV/buckets"))
+    assert(mhProbe(Dedup.loadMinhashIndex(spark, mhDir)) ==
+      mhProbe(Dedup.appendToIndex(mh, batch, "doc_id", "text")))
 
     // Hamming
     val hashes = Seq((1L, 0L), (2L, -1L)).toDF("doc_id", "h")
     val hBatch = Seq((3L, 3L)).toDF("doc_id", "h")
-    val (hmP, hmV) = (tmp("sv-hm-p"), tmp("sv-hm-v"))
-    for (d <- Seq(hmP, hmV))
-      Dedup.saveHammingIndex(
-        Dedup.hammingIndex(hashes, "doc_id", "h"), d)
-    Dedup.versionHammingIndex(spark, hmV)
-    for (d <- Seq(hmP, hmV))
-      Dedup.appendToHammingIndex(spark, d, hBatch, "doc_id", "h")
-    def hmProbe(d: String) = Dedup.incrementalHammingDedup(
-      Seq((9L, 2L)).toDF("doc_id", "h"),
-      Dedup.loadHammingIndex(spark, d), "doc_id", "h", maxDist = 2)
+    val hmDir = tmp("sv-hm")
+    Dedup.saveHammingIndex(Dedup.hammingIndex(hashes, "doc_id", "h"), hmDir)
+    Dedup.appendToHammingIndex(spark, hmDir, hBatch, "doc_id", "h")
+    versioned(s"$hmDir/buckets")
+    def hmProbe(i: Dedup.HammingIndex) = Dedup.incrementalHammingDedup(
+      Seq((9L, 2L)).toDF("doc_id", "h"), i, "doc_id", "h", maxDist = 2)
       .collect().map(_.getLong(0)).toSet
-    assert(hmProbe(hmV) == hmProbe(hmP))
+    assert(hmProbe(Dedup.loadHammingIndex(spark, hmDir)) == hmProbe(
+      Dedup.hammingIndex(hashes.unionByName(hBatch), "doc_id", "h")))
 
-    // IVF
+    // IVF (nProbe = nCells: every cell is searched, so the probe is
+    // exact whichever cells the vectors were assigned to)
     val vecs = Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f)))
       .toDF("vec_id", "emb")
     val vBatch = Seq((3L, Seq(0.9f, 0.1f))).toDF("vec_id", "emb")
-    val (ivP, ivV) = (tmp("sv-iv-p"), tmp("sv-iv-v"))
-    for (d <- Seq(ivP, ivV))
-      Similarity.saveIvfIndex(
-        Similarity.ivfIndex(vecs, "vec_id", "emb", nCells = 2), d)
-    Similarity.versionIvfIndex(spark, ivV)
-    for (d <- Seq(ivP, ivV))
-      Similarity.appendToIvfIndex(spark, d, vBatch, "vec_id", "emb")
-    def ivProbe(d: String) = Similarity.incrementalSemDedup(
-      Seq((9L, Seq(0.95f, 0.05f))).toDF("vec_id", "emb"),
-      Similarity.loadIvfIndex(spark, d), "vec_id", "emb",
-      threshold = 0.9, nProbe = 2)
+    val ivDir = tmp("sv-iv")
+    Similarity.saveIvfIndex(
+      Similarity.ivfIndex(vecs, "vec_id", "emb", nCells = 2), ivDir)
+    Similarity.appendToIvfIndex(spark, ivDir, vBatch, "vec_id", "emb")
+    versioned(s"$ivDir/cells")
+    def ivProbe(i: Similarity.IvfIndex) = Similarity.incrementalSemDedup(
+      Seq((9L, Seq(0.95f, 0.05f))).toDF("vec_id", "emb"), i,
+      "vec_id", "emb", threshold = 0.9, nProbe = 2)
       .collect().map(_.getLong(0)).toSet
-    assert(ivProbe(ivV) == ivProbe(ivP))
+    assert(ivProbe(Similarity.loadIvfIndex(spark, ivDir)) == ivProbe(
+      Similarity.ivfIndex(vecs.unionByName(vBatch), "vec_id", "emb",
+        nCells = 2)))
+
+    // PQ and IVF-PQ: the batch encodes under the frozen stored books
+    // (and, for IVF-PQ, takes its nearest stored centroid's cell)
+    import graft.TestSpark.sf
+    val emb = graft.Tables.load(spark, sf, "embeddings")
+    val corpus = emb.filter(col("vec_id") < 100)
+    val eBatch = emb.filter(col("vec_id") >= 100 && col("vec_id") < 120)
+    val queries = emb.filter(col("vec_id") < 3)
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3))).toSet
+    val pq = Similarity.pqIndex(corpus, "vec_id", "embedding")
+    val pqDir = tmp("sv-pq")
+    Similarity.savePqIndex(pq, pqDir)
+    Similarity.appendToPqIndex(spark, pqDir, eBatch, "vec_id", "embedding")
+    versioned(s"$pqDir/codes")
+    assert(ranks(Similarity.pqTopK(queries,
+      Similarity.loadPqIndex(spark, pqDir), "vec_id", "embedding", 10)) ==
+      ranks(Similarity.pqTopK(queries, Similarity.PqIndex(
+        pq.codes.unionByName(Similarity.pqEncodeWith(
+          eBatch, "vec_id", "embedding", pq.books)), pq.books),
+        "vec_id", "embedding", 10)))
+    val ivpq = Similarity.ivfPqIndex(corpus, "vec_id", "embedding",
+      nCells = 4)
+    val ivpqDir = tmp("sv-ivpq")
+    Similarity.saveIvfPqIndex(ivpq, ivpqDir)
+    Similarity.appendToIvfPqIndex(spark, ivpqDir, eBatch,
+      "vec_id", "embedding")
+    versioned(s"$ivpqDir/cellcodes")
+    val batchRows = eBatch
+      .select(col("vec_id").as("neighbor_id"),
+        element_at(Similarity.nearestCells(col("embedding"),
+          ivpq.centroids, 1), 1).as("__cell"))
+      .join(Similarity.pqEncodeWith(eBatch, "vec_id", "embedding",
+        ivpq.books), "neighbor_id")
+    assert(ranks(Similarity.ivfPqTopK(queries,
+      Similarity.loadIvfPqIndex(spark, ivpqDir), "vec_id", "embedding",
+      10, nProbe = 2)) ==
+      ranks(Similarity.ivfPqTopK(queries,
+        ivpq.copy(cellCodes = ivpq.cellCodes.unionByName(batchRows)),
+        "vec_id", "embedding", 10, nProbe = 2)))
+
+    // BM25: all three tables, the meta delta ledger included
+    val terms = Seq("alpha", "eta")
+    val bmDir = tmp("sv-bm")
+    Retrieval.saveBm25Index(docs, "doc_id", "text", bmDir)
+    Retrieval.appendToBm25Index(batch, "doc_id", "text", bmDir)
+    versioned(s"$bmDir/postings", s"$bmDir/lens", s"$bmDir/meta")
+    def scores(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(scores(Retrieval.bm25Probe(
+      Retrieval.loadBm25Index(spark, bmDir), terms, 10)) ==
+      scores(TextAnalysis.bm25(docs.unionByName(batch), "doc_id", "text",
+        terms, 10)))
+  }
+
+  test("a table dir with no snapshot manifest fails loudly and names " +
+      "SnapshotDir.enable, which upgrades it in place") {
+    val dir = tmp("graft-snap") + "/t"
+    (0L until 7L).toDF("id").coalesce(1).write.parquet(dir)
+    val e = intercept[IllegalArgumentException] {
+      Dedup.snapshotFiles(spark, dir)
+    }
+    assert(e.getMessage.contains(dir) &&
+      e.getMessage.contains("SnapshotDir.enable"), e.getMessage)
+    // an index whose data table was written that way fails the same way
+    val idx = tmp("graft-snap-mh")
+    Dedup.saveMinhashIndex(Dedup.minhashIndex(
+      Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text"),
+      "doc_id", "text"), idx)
+    fs.delete(new Path(s"$idx/buckets/_manifests"), true)
+    val le = intercept[IllegalArgumentException] {
+      Dedup.loadMinhashIndex(spark, idx)
+    }
+    assert(le.getMessage.contains("SnapshotDir.enable"), le.getMessage)
+    SnapshotDir.enable(spark, dir)
+    assert(SnapshotDir.versions(spark, dir) == Seq(1L))
+    assert(spark.read.parquet(Dedup.snapshotFiles(spark, dir): _*)
+      .count() == 7L)
+  }
+
+  test("delete crash between the sets and buckets rewrites leaves a " +
+      "correct probe (stale band tuples are garbage, not answers)") {
+    val corpus = Seq(
+      (0L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (1L, "red orange yellow green blue indigo violet"))
+      .toDF("doc_id", "text")
+    val batch = Seq(
+      (10L, "alpha beta gamma delta epsilon zeta eta theta"))
+      .toDF("doc_id", "text")
+    val dir = tmp("graft-del-crash")
+    Dedup.saveMinhashIndex(Dedup.minhashIndex(corpus, "doc_id", "text"), dir)
+    def probe() = Dedup.incrementalMinhashDedup(batch,
+      Dedup.loadMinhashIndex(spark, dir), "doc_id", "text", threshold = 0.8)
+      .collect().map(_.getLong(0)).toSet
+    assert(probe() == Set.empty[Long], "doc 10 suppressed by corpus doc 0")
+    // simulate deleteFromMinhashIndex crashing after its sets/ commit:
+    // only sets/ is rewritten, buckets/ keeps doc 0's band tuples
+    Dedup.rewriteParquetDir(spark, s"$dir/sets", 1)(
+      _.filter(col("__cid") =!= 0L))
+    // the stale buckets row still yields a CANDIDATE, but the Jaccard
+    // verify inner-joins sets/ — no sets row, no drop: the probe is
+    // already correct after the sets commit (the documented ordering
+    // contract); re-running the delete finishes the job
+    assert(probe() == Set(10L),
+      "probe must be correct with only sets/ rewritten")
+    Dedup.deleteFromMinhashIndex(spark, dir, Seq(0L).toDF("doc_id"))
+    assert(probe() == Set(10L))
+    // after the re-run no file under either table holds doc 0
+    for (t <- Seq("sets", "buckets"))
+      assert(spark.read.option("recursiveFileLookup", "true")
+        .parquet(s"$dir/$t")
+        .filter(col("__cid") === 0L).count() == 0L, t)
   }
 }
