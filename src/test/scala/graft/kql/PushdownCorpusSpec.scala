@@ -1,27 +1,42 @@
 package graft.kql
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** Port of the reference's shared connector test corpus
-  * (`tests/common/test_cases.rs:79-441`, ~38 cases): same KQL, same 10-row
-  * stackoverflow/hdfs fixtures (loaded read-only from the reference tree —
-  * not copied), same expected counts/rows. The reference asserts residual
-  * plans per connector too; our analog of "was it pushed down" lives in
-  * PlanSpec, so here we assert results only.
+  * (`tests/common/test_cases.rs:79-441`, 42 cases): same KQL, same expected
+  * counts/rows. The two 10-row fixtures, `pushdown/stackoverflow.posts.10.json`
+  * and `pushdown/hdfs.logs.10.json` under `src/test/resources/`, are
+  * hand-written stand-ins for the reference's data files, which are not
+  * part of this repo: kept here, they let the spec run from a clean
+  * checkout and read nothing outside it. They keep the reference's shapes
+  * (FIXTURES.md §1–§2: fields missing rather than null, answers without
+  * titles or tags, an epoch-seconds hdfs `timestamp` and nested structs),
+  * and their text is chosen so that every expected value below follows from
+  * the rows by hand, with no tie or row order deciding it; FIXTURES.md §1
+  * lists the rows behind each value. The reference asserts residual plans
+  * per connector too; our analog of "was it pushed down" lives in PlanSpec,
+  * so here we assert results only.
   */
 class PushdownCorpusSpec extends AnyFunSuite {
   import TestSpark.spark
 
-  private val res = "/root/reference/tests/resources"
+  /** A fixture's JSON lines, read off the test classpath. */
+  private def res(name: String): Dataset[String] = {
+    val path = s"pushdown/$name"
+    val in = getClass.getClassLoader.getResourceAsStream(path)
+    require(in != null, s"test classpath resource '$path' not found (src/test/resources/$path)")
+    val src = scala.io.Source.fromInputStream(in, "UTF-8")
+    try spark.createDataset(src.getLines().toList)(Encoders.STRING) finally src.close()
+  }
 
   private lazy val cat: Catalog = {
     val c = new Catalog(spark)
-    def stack: DataFrame = spark.read.json(s"$res/stackoverflow.posts.10.json")
+    def stack: DataFrame = spark.read.json(res("stackoverflow.posts.10.json"))
       .withColumn("@time", col("creationDate").cast("timestamp"))
-    def hdfs: DataFrame = spark.read.json(s"$res/hdfs.logs.10.json")
+    def hdfs: DataFrame = spark.read.json(res("hdfs.logs.10.json"))
       .withColumn("@time", timestamp_seconds(col("timestamp")))
     c.register("test.stack", stack)
     c.register("test.stack_mirror", stack)
