@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.localCheckpointNoStats
 import org.apache.spark.sql.functions._
 
 /** Distributed graph utilities for dedup pipelines.
@@ -12,6 +13,85 @@ import org.apache.spark.sql.functions._
   * beyond-the-reference training-pipeline operators.
   */
 object Graph {
+
+  /** Canonical undirected edge set: min-id first, self-loops dropped,
+    * duplicate/reverse edges collapsed — the normalization every
+    * undirected operator here starts from. */
+  private def canonicalUndirected(edges: DataFrame): DataFrame =
+    edges
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .filter(col("a") =!= col("b"))
+      .distinct()
+
+  /** Both directions (u, v) of every canonical edge, materialized once:
+    * the per-round neighbor join of [[coreNumbers]] and
+    * [[labelPropagation]] reads it every round. */
+  private def symmetricPinned(und: DataFrame): DataFrame =
+    localCheckpointNoStats(
+      und.select(col("a").as("u"), col("b").as("v"))
+        .unionByName(und.select(col("b").as("u"), col("a").as("v"))))
+
+  /** The canonical edge set as (src, dst, weight = 1): the unweighted
+    * operators run as their weighted forms over it. */
+  private def unitWeighted(edges: DataFrame): DataFrame =
+    canonicalUndirected(edges)
+      .select(col("a").as("src"), col("b").as("dst"), lit(1L).as("weight"))
+
+  /** Materializes one round of an iterative kernel and reads its `probes`
+    * off that same job: each probe is an aggregate riding the checkpoint
+    * as an [[org.apache.spark.sql.Observation]] metric, so a round costs
+    * one Spark job, not a checkpoint plus a probe scan. The checkpoint
+    * severs statistics lineage: every loop body here joins the previous
+    * round, and preserved origin stats would SQUARE per round (see
+    * GraftColumnBridge.localCheckpointNoStats). Probes read as exact
+    * integers (DECIMAL(38,0)); a sum over no rows (empty input) reads as 0.
+    */
+  private def checkpoint(df: DataFrame, name: String, probes: Column*)
+      : (DataFrame, Seq[BigDecimal]) =
+    if (probes.isEmpty) (localCheckpointNoStats(df), Nil)
+    else {
+      val obs = org.apache.spark.sql.Observation(name)
+      val named = probes.zipWithIndex.map { case (p, i) =>
+        p.cast("decimal(38,0)").as(s"p$i") }
+      val out = localCheckpointNoStats(
+        df.observe(obs, named.head, named.tail: _*))
+      val metrics = obs.get
+      (out, probes.indices.map(i => metrics(s"p$i") match {
+        case null                    => BigDecimal(0)
+        case d: java.math.BigDecimal => BigDecimal(d)
+      }))
+    }
+
+  /** The one driver loop of every iterative kernel here. Round r builds
+    * `step(rows, probe)` from the previous round's rows and probe values
+    * (`init` and `initProbe` before round 1), [[checkpoint]]s it with
+    * `probes` riding that one job, and stops once `done(previous probe,
+    * this probe)` holds or after `maxRounds` rounds. The driver loop is
+    * control flow only — no row data reaches the driver.
+    *
+    * @return (last round's rows, its probe values, whether `done` held) —
+    *         a kernel that a truncated run would make wrong fails loudly
+    *         on `converged = false`
+    */
+  private def iterate(name: String, init: DataFrame, maxRounds: Int,
+      probes: Column*)(step: (DataFrame, Seq[BigDecimal]) => DataFrame)(
+      done: (Seq[BigDecimal], Seq[BigDecimal]) => Boolean,
+      initProbe: Seq[BigDecimal]): (DataFrame, Seq[BigDecimal], Boolean) = {
+    var rows = init
+    var probe = initProbe
+    var converged = false
+    var round = 0
+    while (!converged && round < maxRounds) {
+      round += 1
+      val (next, p) =
+        checkpoint(step(rows, probe), s"${name}_$round", probes: _*)
+      converged = done(probe, p)
+      rows = next
+      probe = p
+    }
+    (rows, probe, converged)
+  }
 
   /** Exact per-vertex TRIANGLE counts (round 10) — the standard
     * clustering-coefficient / community-density primitive, in the
@@ -32,16 +112,6 @@ object Graph {
     * @param edges columns `src`, `dst` (undirected; either orientation)
     * @return (id, n_triangles) for every vertex appearing in an edge
     */
-  /** Canonical undirected edge set: min-id first, self-loops dropped,
-    * duplicate/reverse edges collapsed — the normalization every
-    * undirected operator here starts from. */
-  private def canonicalUndirected(edges: DataFrame): DataFrame =
-    edges
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-
   def triangleCounts(edges: DataFrame): DataFrame = {
     val und = canonicalUndirected(edges)
     val degrees = undirectedDegrees(und)
@@ -130,12 +200,10 @@ object Graph {
     * (k−1)-core's survivors (cores are nested), so each vertex is peeled
     * exactly once overall; each peel round is one in-set degree
     * aggregation (sym-edges semi-joined to the survivor set twice,
-    * dst-keyed partial-agg count) + a filter, with the survivor COUNT
-    * riding the round's checkpoint as an Observation metric (the
-    * [[connectedComponents]] probe pattern — one action per round).
-    * Rounds per level are bounded by the peel cascade depth; total jobs
-    * = Σ_k rounds_k, and k never exceeds √(2m) (a k-core needs
-    * ≥ k(k+1)/2 edges). The driver loop is control flow only.
+    * dst-keyed partial-agg count) + a filter, the survivor COUNT its
+    * [[iterate]] probe. Rounds per level are bounded by the peel cascade
+    * depth; total jobs = Σ_k rounds_k, and k never exceeds √(2m) (a
+    * k-core needs ≥ k(k+1)/2 edges).
     *
     * @param vertices one column `id`
     * @param edges    columns `src`, `dst` (undirected; either orientation)
@@ -145,43 +213,11 @@ object Graph {
     */
   def coreNumbers(vertices: DataFrame, edges: DataFrame,
       maxK: Int = 1000): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.localCheckpointNoStats
-    val und = canonicalUndirected(edges)
-    val sym = localCheckpointNoStats(
-      und.select(col("a").as("u"), col("b").as("v"))
-        .unionByName(und.select(col("b").as("u"), col("a").as("v"))))
-    val probe = count(lit(1)).as("c")
-    def checkpointWithCount(df: DataFrame, tag: String)
-        : (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation(s"kcore_$tag")
-      val out = localCheckpointNoStats(df.observe(obs, probe))
-      (out, obs.get("c").asInstanceOf[Long])
-    }
-    // the survivor count rides the ids materialization itself (round 16)
-    // — the previous separate checkpointWithCount(ids, "init") re-ran a
-    // second materialization job over the just-checkpointed distinct
-    val (ids, idCount) =
-      checkpointWithCount(vertices.select(col("id")).distinct(), "init")
-    // peel the given survivor set to the k-core fixpoint
-    def peel(set: DataFrame, setCount: Long, k: Int): (DataFrame, Long) = {
-      var cur = set
-      var curCount = setCount
-      var round = 0
-      while (true) {
-        val (next, nextCount) = checkpointWithCount(
-          sym
-            .join(cur.select(col("id").as("u")), "u")
-            .join(cur.select(col("id").as("v")), "v")
-            .groupBy("u").agg(count(lit(1)).as("__d"))
-            .filter(col("__d") >= k)
-            .select(col("u").as("id")), s"${k}_$round")
-        if (nextCount == curCount) return (cur, curCount)
-        cur = next
-        curCount = nextCount
-        round += 1
-      }
-      (cur, curCount) // unreachable
-    }
+    val sym = symmetricPinned(canonicalUndirected(edges))
+    val size = count(lit(1))
+    // the survivor count rides the ids materialization itself
+    val (ids, Seq(idCount)) =
+      checkpoint(vertices.select(col("id")).distinct(), "kcore_init", size)
     var survivors = ids
     var survivorCount = idCount
     var k = 1
@@ -191,7 +227,17 @@ object Graph {
     // maxK + 1 (off-by-one otherwise: a graph whose max core equals
     // maxK would throw despite never exceeding the documented bound)
     while (survivorCount > 0 && k <= maxK + 1) {
-      val (core, coreCount) = peel(survivors, survivorCount, k)
+      val level = k
+      // peel to the k-core fixpoint: every round that is not the fixpoint
+      // drops a vertex, so the round count needs no cap of its own
+      val (core, Seq(coreCount), _) =
+        iterate(s"kcore_$level", survivors, Int.MaxValue, size)(
+          (cur, _) => sym
+            .join(cur.select(col("id").as("u")), "u")
+            .join(cur.select(col("id").as("v")), "v")
+            .groupBy("u").agg(count(lit(1)).as("__d"))
+            .filter(col("__d") >= level)
+            .select(col("u").as("id")))(_ == _, Seq(survivorCount))
       if (coreCount < survivorCount)
         // both sides are checkpointed, so the lazy anti-join is stable
         dropped += survivors.join(core, Seq("id"), "left_anti")
@@ -227,42 +273,33 @@ object Graph {
     * source (each directed edge copy fetches its neighbor's current
     * label), one (dst, label)-keyed count with map-side combine (hub
     * skew absorbed there), one dst-keyed argmax via min(struct(−n,
-    * label)), then a checkpoint (the lineage barrier, PageRank's
-    * pattern). Two shuffles per round, no driver data.
+    * label)), then the round's checkpoint. Two shuffles per round.
     *
     * @return (id, community) — the final label per vertex
     */
   def labelPropagation(vertices: DataFrame, edges: DataFrame,
       iterations: Int = 5): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.localCheckpointNoStats
     require(iterations >= 1)
-    val und = canonicalUndirected(edges)
-    val sym = localCheckpointNoStats(
-      und.select(col("a").as("u"), col("b").as("v"))
-        .unionByName(und.select(col("b").as("u"), col("a").as("v"))))
+    val sym = symmetricPinned(canonicalUndirected(edges))
     val ids = localCheckpointNoStats(vertices.select(col("id")).distinct())
-    // lazy seed over the checkpointed ids — materializing (id, id) as its
-    // own checkpoint bought a Spark job per LPA call and nothing else
-    // (round 1 reads the trivial projection twice; ids is materialized)
-    var labels = ids.select(col("id"), col("id").as("label"))
-    var i = 0
-    while (i < iterations) {
-      val next = sym
-        .join(labels.select(col("id").as("u"), col("label")), "u")
-        .groupBy(col("v"), col("label"))
-        .agg(count(lit(1)).as("__n"))
-        .groupBy(col("v"))
-        // most frequent, then smallest label: lexicographic min over
-        // (−count, label)
-        .agg(min(struct((-col("__n")).as("n"), col("label").as("l")))
-          .as("__w"))
-        .select(col("v").as("id"), col("__w.l").as("__next"))
-      labels = localCheckpointNoStats(
+    // lazy seed over the checkpointed ids: round 1 reads the trivial
+    // projection twice, and ids is materialized
+    val (labels, _, _) = iterate("lpa",
+        ids.select(col("id"), col("id").as("label")), iterations) {
+      (labels, _) =>
+        val next = sym
+          .join(labels.select(col("id").as("u"), col("label")), "u")
+          .groupBy(col("v"), col("label"))
+          .agg(count(lit(1)).as("__n"))
+          .groupBy(col("v"))
+          // most frequent, then smallest label: lexicographic min over
+          // (−count, label)
+          .agg(min(struct((-col("__n")).as("n"), col("label").as("l")))
+            .as("__w"))
+          .select(col("v").as("id"), col("__w.l").as("__next"))
         labels.join(next, Seq("id"), "left_outer")
-          .select(col("id"),
-            coalesce(col("__next"), col("label")).as("label")))
-      i += 1
-    }
+          .select(col("id"), coalesce(col("__next"), col("label")).as("label"))
+    }((_, _) => false, Nil)
     labels.select(col("id"), col("label").as("community"))
   }
 
@@ -422,10 +459,7 @@ object Graph {
     */
   def louvainRefine(labels: DataFrame, edges: DataFrame,
       gammaNum: Long = 1L, gammaDen: Long = 1L): DataFrame =
-    louvainRefineWeighted(labels,
-      canonicalUndirected(edges)
-        .select(col("a").as("src"), col("b").as("dst"),
-          lit(1L).as("weight")),
+    louvainRefineWeighted(labels, unitWeighted(edges),
       gammaNum = gammaNum, gammaDen = gammaDen)
 
   /** The WEIGHTED form of [[louvainRefine]] — the engine of the
@@ -558,16 +592,8 @@ object Graph {
     * @return (src, dst, weight), src ≤ dst; src == dst rows are
     *         self-loops carrying intra-community weight
     */
-  def louvainCondense(labels: DataFrame, edges: DataFrame): DataFrame = {
-    val und = canonicalUndirected(edges)
-    val lab = labels.select(col("id"), col("community"))
-    und
-      .join(lab.select(col("id").as("a"), col("community").as("__ca")), "a")
-      .join(lab.select(col("id").as("b"), col("community").as("__cb")), "b")
-      .select(least(col("__ca"), col("__cb")).as("src"),
-        greatest(col("__ca"), col("__cb")).as("dst"))
-      .groupBy("src", "dst").agg(count(lit(1)).as("weight"))
-  }
+  def louvainCondense(labels: DataFrame, edges: DataFrame): DataFrame =
+    louvainCondenseWeighted(labels, unitWeighted(edges))
 
   /** TWO-LEVEL Louvain (round 13): one greedy move pass over the seed,
     * condense by the refined assignment, one singleton-seeded WEIGHTED
@@ -619,7 +645,6 @@ object Graph {
     */
   def louvainLevels(seed: DataFrame, edges: DataFrame,
       levels: Int, gammaNum: Long = 1L, gammaDen: Long = 1L): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.localCheckpointNoStats
     require(levels >= 1)
     louvainLevelsFrom(
       localCheckpointNoStats(louvainRefine(seed, edges, gammaNum, gammaDen)),
@@ -633,8 +658,19 @@ object Graph {
     * per caller is pure duplication). `level1` must be materialized
     * (checkpointed): the level loop joins it repeatedly. */
   def louvainLevelsFrom(level1: DataFrame, edges: DataFrame,
-      levels: Int, gammaNum: Long = 1L, gammaDen: Long = 1L): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.localCheckpointNoStats
+      levels: Int, gammaNum: Long = 1L, gammaDen: Long = 1L): DataFrame =
+    levelsFrom(level1, edges, levels, gammaNum, gammaDen, (moved, _) => moved)
+
+  /** The level loop of [[louvainLevelsFrom]] and [[leidenLevelsFrom]]:
+    * each level after the first runs the singleton-seeded weighted move
+    * pass over the condensed graph, `repair`s its assignment against the
+    * condensed edges (the identity for Louvain, [[splitDisconnected]] for
+    * Leiden), and composes it into the vertex → community mapping. Both
+    * the level's assignment and the composed mapping are pinned: the
+    * next condense and the next compose join them. */
+  private def levelsFrom(level1: DataFrame, edges: DataFrame, levels: Int,
+      gammaNum: Long, gammaDen: Long,
+      repair: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     require(levels >= 1)
     var assign = level1
     var wgraph = louvainCondense(assign, edges)
@@ -642,9 +678,11 @@ object Graph {
     while (i < levels) {
       val superSeed = assign.select(col("community").as("id")).distinct()
         .select(col("id"), col("id").as("community"))
-      val l = localCheckpointNoStats(louvainRefineWeighted(
+      val moved = louvainRefineWeighted(
         superSeed, wgraph, restrictToSmaller = true,
-        gammaNum = gammaNum, gammaDen = gammaDen))
+        gammaNum = gammaNum, gammaDen = gammaDen)
+      val l = localCheckpointNoStats(
+        repair(moved, wgraph.select(col("src"), col("dst"))))
       assign = localCheckpointNoStats(
         assign.select(col("id"), col("community").as("__c"))
           .join(l.select(col("id").as("__c"),
@@ -688,7 +726,6 @@ object Graph {
     */
   def leidenLevels(seed: DataFrame, edges: DataFrame,
       levels: Int, gammaNum: Long = 1L, gammaDen: Long = 1L): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.localCheckpointNoStats
     require(levels >= 1)
     leidenLevelsFrom(
       localCheckpointNoStats(splitDisconnected(
@@ -701,31 +738,8 @@ object Graph {
     * the [[louvainLevelsFrom]] twin for callers that already hold the
     * repaired level-1 pass. */
   def leidenLevelsFrom(repaired1: DataFrame, edges: DataFrame,
-      levels: Int, gammaNum: Long = 1L, gammaDen: Long = 1L): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.localCheckpointNoStats
-    require(levels >= 1)
-    var assign = repaired1
-    var wgraph = louvainCondense(assign, edges)
-    var i = 1
-    while (i < levels) {
-      val superSeed = assign.select(col("community").as("id")).distinct()
-        .select(col("id"), col("id").as("community"))
-      val moved = louvainRefineWeighted(
-        superSeed, wgraph, restrictToSmaller = true,
-        gammaNum = gammaNum, gammaDen = gammaDen)
-      val l = localCheckpointNoStats(
-        splitDisconnected(moved, wgraph.select(col("src"), col("dst"))))
-      assign = localCheckpointNoStats(
-        assign.select(col("id"), col("community").as("__c"))
-          .join(l.select(col("id").as("__c"),
-            col("community").as("__c2")), "__c")
-          .select(col("id"), col("__c2").as("community")))
-      i += 1
-      if (i < levels)
-        wgraph = louvainCondenseWeighted(l, wgraph)
-    }
-    assign
-  }
+      levels: Int, gammaNum: Long = 1L, gammaDen: Long = 1L): DataFrame =
+    levelsFrom(repaired1, edges, levels, gammaNum, gammaDen, splitDisconnected)
 
   /** [[leidenLevels]] at the two-level instantiation the gate covers. */
   def leidenTwoLevel(seed: DataFrame, edges: DataFrame): DataFrame =
@@ -746,10 +760,7 @@ object Graph {
     *
     * Scale shape per iteration: one edge⋈outdeg⋈rank shuffle join + one
     * dst-keyed partial-aggregated sum — the CC loop's cost model; fixed
-    * `iters` (no convergence probe needed), stats-severing checkpoints
-    * between iterations (the SPARK-39748 lesson). The dangling mass is
-    * an [[org.apache.spark.sql.Observation]] metric riding each
-    * checkpoint's materialization job — no extra scan.
+    * `iters`, the dangling mass each round's [[iterate]] probe.
     *
     * @param vertices one column `id`
     * @param edges    columns `src`, `dst` (DIRECTED; dups/self-loops dropped)
@@ -758,8 +769,7 @@ object Graph {
     */
   def pageRank(vertices: DataFrame, edges: DataFrame, iters: Int = 5,
       scale: Long = 1000000000000L): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.{column, expression,
-      localCheckpointNoStats}
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
     require(iters >= 1 && scale > 0)
     def intDiv(a: Column, b: Column): Column =
       column(org.apache.spark.sql.catalyst.expressions.IntegralDivide(
@@ -775,58 +785,39 @@ object Graph {
     val n = ids.count()
     require(n > 0, "empty vertex set")
     val teleport = (scale * 15L) / (n * 100L) // driver-exact integer
-    // dangling flag (no out-edges) is a loop invariant; each iteration's
-    // dangling MASS rides the ranks checkpoint's own materialization job
-    // as an Observation metric (the connectedComponents probe pattern) —
-    // the textbook redistribution costs no extra scan per iteration
-    // the dangling COUNT rides flagged's own checkpoint materialization
-    // (round 16): iteration 0's dangling mass is exactly
-    // (scale / n) × |dangling| — driver-exact — so the separate ranks-0
-    // checkpoint job bought nothing; the initial ranks frame is a lazy
-    // literal projection over the already-materialized flagged rows
-    val initObs = org.apache.spark.sql.Observation("pr_dangling_init")
-    val flagged = localCheckpointNoStats(
+    // the dangling flag (no out-edges) is a loop invariant, and the
+    // dangling COUNT rides its checkpoint: iteration 0's dangling mass is
+    // exactly (scale / n) × |dangling|, driver-exact, so the initial ranks
+    // frame is a lazy literal projection over the materialized flags
+    val (flagged, Seq(nDangling)) = checkpoint(
       ids.join(
         outdeg.select(col("src").as("id"), lit(1).as("__has_out")),
         Seq("id"), "left_outer")
-        .select(col("id"), col("__has_out").isNull.as("__dangling"))
-        .observe(initObs,
-          sum(when(col("__dangling"), lit(1L)).otherwise(lit(0L)))
-            .as("nd")))
-    val danglingProbe = sum(
-      when(col("__dangling"), col("rank_scaled")).otherwise(lit(0L)))
-      .as("dm")
-    def checkpointWithDangling(df: DataFrame, round: Int)
-        : (DataFrame, Long) = {
-      val obs = org.apache.spark.sql.Observation(s"pr_dangling_$round")
-      val out = localCheckpointNoStats(df.observe(obs, danglingProbe))
-      (out, obs.get("dm").asInstanceOf[Long])
-    }
-    var ranks = flagged.select(col("id"),
-      lit(scale / n).as("rank_scaled"), col("__dangling"))
-    var danglingMass =
-      (scale / n) * initObs.get("nd").asInstanceOf[Long]
-    var i = 0
-    while (i < iters) {
-      val contrib = e
-        .join(outdeg, "src")
-        .join(ranks.select(col("id").as("src"), col("rank_scaled")), "src")
-        .select(col("dst").as("id"),
-          intDiv(col("rank_scaled"), col("__outdeg")).as("__c"))
-      val sums = contrib.groupBy("id").agg(sum(col("__c")).as("__in"))
-      val share = danglingMass / n // driver-exact integer
-      val (next, dm) = checkpointWithDangling(flagged
-        .join(sums, Seq("id"), "left_outer")
-        .select(col("id"),
-          (lit(teleport) +
-            intDiv((coalesce(col("__in"), lit(0L)) + lit(share)) * lit(85L),
-              lit(100L)))
-            .as("rank_scaled"),
-          col("__dangling")), i + 1)
-      ranks = next
-      danglingMass = dm
-      i += 1
-    }
+        .select(col("id"), col("__has_out").isNull.as("__dangling")),
+      "pr_dangling_init",
+      sum(when(col("__dangling"), lit(1L)).otherwise(lit(0L))))
+    // each iteration's dangling MASS rides that iteration's checkpoint
+    val (ranks, _, _) = iterate("pr_dangling",
+        flagged.select(col("id"), lit(scale / n).as("rank_scaled"),
+          col("__dangling")), iters,
+        sum(when(col("__dangling"), col("rank_scaled")).otherwise(lit(0L)))) {
+      (ranks, danglingMass) =>
+        val contrib = e
+          .join(outdeg, "src")
+          .join(ranks.select(col("id").as("src"), col("rank_scaled")), "src")
+          .select(col("dst").as("id"),
+            intDiv(col("rank_scaled"), col("__outdeg")).as("__c"))
+        val sums = contrib.groupBy("id").agg(sum(col("__c")).as("__in"))
+        val share = danglingMass.head.toLong / n // driver-exact integer
+        flagged
+          .join(sums, Seq("id"), "left_outer")
+          .select(col("id"),
+            (lit(teleport) +
+              intDiv((coalesce(col("__in"), lit(0L)) + lit(share)) * lit(85L),
+                lit(100L)))
+              .as("rank_scaled"),
+            col("__dangling"))
+    }((_, _) => false, Seq(nDangling * (scale / n)))
     ranks.select("id", "rank_scaled")
   }
 
@@ -836,16 +827,10 @@ object Graph {
     * neighbors' labels; fixpoint = components labeled by their min vertex id.
     *
     * Scale shape per round: one shuffle join (edges × labels on src) + one
-    * groupBy(id).min — both partial-aggregated map-side. `localCheckpoint`
-    * truncates lineage so the plan does not double per round, and the
-    * convergence probe is a single scalar aggregate (labels only ever
-    * decrease, so an unchanged decimal sum ⇔ fixpoint — no extra join).
-    * The probe rides the checkpoint's own materialization job as an
-    * [[org.apache.spark.sql.Observation]] metric — ONE action per round,
-    * not a checkpoint job plus a separate probe scan over the labels.
+    * groupBy(id).min — both partial-aggregated map-side — and the
+    * convergence probe rides the round's checkpoint (see [[minLabels]]).
     * Rounds needed = graph diameter; dup clusters are near-cliques, so
-    * 2-3 rounds in practice. The driver loop is control flow only — no row
-    * data ever reaches the driver.
+    * 2-3 rounds in practice.
     *
     * @param vertices one column `id` (bigint)
     * @param edges    columns `src`, `dst` (undirected; either orientation)
@@ -853,49 +838,10 @@ object Graph {
     */
   def connectedComponents(
       vertices: DataFrame, edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.localCheckpointNoStats
     val sym = localCheckpointNoStats(
       edges.select(col("src"), col("dst"))
         .union(edges.select(col("dst").as("src"), col("src").as("dst"))))
-    // decimal(38,0) keeps the probe exact far past a BIGINT overflow
-    // (1e12 vertices × 1e12 max label would wrap a 64-bit sum)
-    val probe = sum(col("cluster_id").cast("decimal(38,0)")).as("ls")
-    // the SEED sum rides round 1's own observation instead of a separate
-    // init checkpoint job (round 16): every round's output holds exactly
-    // one row per vertex id, so sum(id) over round 1's output IS the
-    // seed labeling's sum — the init materialization of (id, id) bought
-    // nothing but a Spark job per CC invocation (and CC runs inside
-    // every dup-cluster / split-repair / connectivity gate)
-    val seedProbe = sum(col("id").cast("decimal(38,0)")).as("ss")
-    def checkpointWithSum(df: DataFrame, round: Int)
-        : (DataFrame, java.math.BigDecimal, java.math.BigDecimal) = {
-      val obs = org.apache.spark.sql.Observation(s"cc_probe_$round")
-      // stats-severing checkpoint: the loop body joins the previous
-      // checkpoint, so preserved origin stats would SQUARE per round
-      // (see GraftColumnBridge.localCheckpointNoStats)
-      val out = localCheckpointNoStats(df.observe(obs, probe, seedProbe))
-      def dec(k: String) = obs.get(k).asInstanceOf[java.math.BigDecimal] match {
-        case null => java.math.BigDecimal.ZERO // empty vertex set
-        case d    => d
-      }
-      (out, dec("ls"), dec("ss"))
-    }
-    var labels = vertices.select(col("id"), col("id").as("cluster_id"))
-    var prevSum: java.math.BigDecimal = null // round 1 reads it from "ss"
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val msgs = sym.join(labels, sym("src") === labels("id"))
-        .select(col("dst").as("id"), col("cluster_id"))
-      val (next, nextSum, idSum) = checkpointWithSum(
-        labels.unionByName(msgs)
-          .groupBy("id").agg(min("cluster_id").as("cluster_id")), i + 1)
-      if (prevSum == null) prevSum = idSum
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      labels = next
-      i += 1
-    }
+    val (labels, converged) = minLabels(vertices, sym, maxIter, "cc_probe")
     // silent truncation would hand downstream dedup MULTIPLE "canonical"
     // ids inside one component — fail loudly instead (rounds needed equal
     // the component diameter; a hit here means the graph is a long chain,
@@ -905,6 +851,34 @@ object Graph {
         s"connectedComponents did not converge in $maxIter rounds — " +
           "component diameter exceeds maxIter; raise it")
     labels
+  }
+
+  /** The one min-label propagation, shared by [[connectedComponents]]
+    * (over both directions of every edge) and the SCC reachability passes
+    * (over the in-class directed edges): every id starts labeled with
+    * itself, and each round every id takes the min of its own label and
+    * the labels messaged along `edges` (src → dst, pinned by the caller).
+    * Labels only ever decrease, so an unchanged decimal label sum ⇔
+    * fixpoint; decimal(38,0) keeps that sum exact far past a BIGINT
+    * overflow. The seed's sum needs no job of its own: every round's
+    * output holds exactly one row per id, so sum(id) over round 1's
+    * output IS the seed labeling's sum, and it rides round 1's job.
+    *
+    * @return ((id, cluster_id), whether the fixpoint came within maxIter)
+    */
+  private def minLabels(ids: DataFrame, edges: DataFrame, maxIter: Int,
+      name: String): (DataFrame, Boolean) = {
+    val dec = "decimal(38,0)"
+    val (labels, _, converged) = iterate(name,
+        ids.select(col("id"), col("id").as("cluster_id")), maxIter,
+        sum(col("cluster_id").cast(dec)), sum(col("id").cast(dec))) {
+      (labels, _) =>
+        val msgs = edges.join(labels, edges("src") === labels("id"))
+          .select(col("dst").as("id"), col("cluster_id"))
+        labels.unionByName(msgs)
+          .groupBy("id").agg(min("cluster_id").as("cluster_id"))
+    }((prev, cur) => cur(0) == prev.headOption.getOrElse(cur(1)), Nil)
+    (labels, converged)
   }
 
   /** Community CONNECTIVITY diagnostic — the known defect of Louvain-
@@ -1011,8 +985,7 @@ object Graph {
     * partial-aggregated min, identical to [[connectedComponents]]; the
     * class restriction is an equi-filter on the joined row (no extra
     * shuffle); the split is one groupBy((comp, F, B)).min + a join back.
-    * No row data reaches the driver — convergence rides Observation
-    * scalar probes on the checkpoint jobs. Outer rounds needed are
+    * Convergence rides [[iterate]] probes. Outer rounds needed are
     * typically few (each round fully separates chains via the B labels);
     * non-convergence fails loudly, the [[connectedComponents]] precedent.
     *
@@ -1023,61 +996,22 @@ object Graph {
   def stronglyConnectedComponents(
       vertices: DataFrame, edges: DataFrame, maxOuter: Int = 12,
       maxInner: Int = 25): DataFrame = {
-    import org.apache.spark.sql.GraftColumnBridge.localCheckpointNoStats
     val e = localCheckpointNoStats(
       edges.select(col("src"), col("dst")).distinct())
-    val probe = sum(col("comp").cast("decimal(38,0)")).as("cs")
-    def checkpointWithSum(df: DataFrame, tag: String)
-        : (DataFrame, java.math.BigDecimal) = {
-      val obs = org.apache.spark.sql.Observation(s"scc_$tag")
-      val out = localCheckpointNoStats(df.observe(obs, probe))
-      (out, obs.get("cs").asInstanceOf[java.math.BigDecimal])
-    }
     // directed min-label propagation of `comp`-class-restricted
-    // reachability: lbl(u) starts at u's id; messages flow src → dst only
-    // along edges whose endpoints share the current class
+    // reachability: messages flow src → dst only along edges whose
+    // endpoints share the current class
     def propagate(cls: DataFrame, reversed: Boolean): DataFrame = {
       val dir = if (reversed)
         e.select(col("dst").as("src"), col("src").as("dst")) else e
-      val inClass0 = dir
+      val inClass = localCheckpointNoStats(dir
         .join(cls.select(col("id").as("src"), col("comp").as("__sc")), "src")
         .join(cls.select(col("id").as("dst"), col("comp").as("__dc")), "dst")
         .filter(col("__sc") === col("__dc"))
-        .select(col("src"), col("dst"))
-      val inClassCk = localCheckpointNoStats(inClass0)
-      val lprobe = sum(col("lbl").cast("decimal(38,0)")).as("ls")
-      // seed sum rides round 1's observation — same init-job elimination
-      // as [[connectedComponents]] (each propagate call saved one
-      // checkpoint job, and the outer loop calls propagate TWICE a round)
-      val sprobe = sum(col("id").cast("decimal(38,0)")).as("ss")
-      def ckpt(df: DataFrame, tag: String)
-          : (DataFrame, java.math.BigDecimal, java.math.BigDecimal) = {
-        val obs = org.apache.spark.sql.Observation(s"sccp_$tag")
-        val out = localCheckpointNoStats(df.observe(obs, lprobe, sprobe))
-        def dec(k: String) =
-          obs.get(k).asInstanceOf[java.math.BigDecimal] match {
-            case null => java.math.BigDecimal.ZERO
-            case d    => d
-          }
-        (out, dec("ls"), dec("ss"))
-      }
-      var labels = cls.select(col("id"), col("id").as("lbl"))
-      var prev: java.math.BigDecimal = null
-      var conv = false
-      var i = 0
-      while (!conv && i < maxInner) {
-        val msgs = inClassCk.join(labels, inClassCk("src") === labels("id"))
-          .select(col("dst").as("id"), col("lbl"))
-        val (next, ns, ids) = ckpt(
-          labels.unionByName(msgs)
-            .groupBy("id").agg(min("lbl").as("lbl")), s"${i}_$reversed")
-        if (prev == null) prev = ids
-        conv = ns.compareTo(prev) == 0
-        prev = ns
-        labels = next
-        i += 1
-      }
-      if (!conv) throw new IllegalStateException(
+        .select(col("src"), col("dst")))
+      val (labels, converged) =
+        minLabels(cls, inClass, maxInner, s"sccp_$reversed")
+      if (!converged) throw new IllegalStateException(
         s"SCC inner propagation did not converge in $maxInner rounds")
       labels
     }
@@ -1085,29 +1019,24 @@ object Graph {
     // 1-row aggregate), so every labeling in the loop is a min-of-class
     // labeling: per-node comp is then non-decreasing (classes only
     // shrink), making the unchanged-sum probe ⇔ fixpoint exact
+    val probe = sum(col("comp").cast("decimal(38,0)"))
     val verts = vertices.select(col("id")).distinct()
-    var (cls, prevSum) = checkpointWithSum(
+    val (cls0, initSum) = checkpoint(
       verts.crossJoin(broadcast(verts.agg(min(col("id")).as("comp")))),
-      "init")
-    var converged = false
-    var r = 0
-    while (!converged && r < maxOuter) {
-      val f = propagate(cls, reversed = false)
-        .select(col("id"), col("lbl").as("__f"))
-      val b = propagate(cls, reversed = true)
-        .select(col("id"), col("lbl").as("__b"))
-      val tagged = cls.join(f, "id").join(b, "id")
-      val split = tagged
-        .groupBy(col("comp"), col("__f"), col("__b"))
-        .agg(min(col("id")).as("__newcomp"))
-      val (next, nextSum) = checkpointWithSum(
+      "scc_init", probe)
+    val (cls, _, converged) = iterate("scc", cls0, maxOuter, probe) {
+      (cls, _) =>
+        val f = propagate(cls, reversed = false)
+          .select(col("id"), col("cluster_id").as("__f"))
+        val b = propagate(cls, reversed = true)
+          .select(col("id"), col("cluster_id").as("__b"))
+        val tagged = cls.join(f, "id").join(b, "id")
+        val split = tagged
+          .groupBy(col("comp"), col("__f"), col("__b"))
+          .agg(min(col("id")).as("__newcomp"))
         tagged.join(split, Seq("comp", "__f", "__b"))
-          .select(col("id"), col("__newcomp").as("comp")), s"r$r")
-      converged = nextSum.compareTo(prevSum) == 0
-      prevSum = nextSum
-      cls = next
-      r += 1
-    }
+          .select(col("id"), col("__newcomp").as("comp"))
+    }(_ == _, initSum)
     if (!converged)
       throw new IllegalStateException(
         s"stronglyConnectedComponents did not converge in $maxOuter " +

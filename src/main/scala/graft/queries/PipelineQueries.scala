@@ -490,16 +490,17 @@ object PipelineQueries {
          |ORDER BY ls.id""".stripMargin
 
   /** (4-round LPA seed, fixture edges) for the community gates. The
-    * seed is localCheckpointed so a gate that reads it several times
-    * (modularity's joins, the Louvain move pass) reads materialized rows.
-    * Gates that build further levels pass both values on to [[louvainL1]]
-    * and [[leidenL1]] instead of recomputing them. */
+    * seed is a projection over LPA's last round, which is already
+    * checkpointed, so a gate that reads it several times (modularity's
+    * joins, the Louvain move pass) reads materialized rows. Gates that
+    * build further levels pass both values on to [[louvainL1]] and
+    * [[leidenL1]] instead of recomputing them. */
   private def lpaSeedGraph(s: org.apache.spark.sql.SparkSession,
       d: String): (org.apache.spark.sql.DataFrame,
       org.apache.spark.sql.DataFrame) = {
     val (verts, edges) = lpaGeneratorGraph(s, d)
     val seed = graft.functions.Graph.labelPropagation(
-      verts, edges, iterations = 4).localCheckpoint()
+      verts, edges, iterations = 4)
     (seed, edges)
   }
 

@@ -434,6 +434,77 @@ class GraphSamplingSpec extends AnyFunSuite {
     assert(e.getMessage.contains("did not converge"))
   }
 
+  test("SCC and coreNumbers fail loudly when their round caps truncate") {
+    // two 2-cycles joined by a DAG edge: the outer refinement needs a
+    // second round to see its fixpoint
+    val cycles = Seq((0L, 1L), (1L, 0L), (1L, 2L), (2L, 3L), (3L, 2L))
+      .toDF("src", "dst")
+    val outer = intercept[IllegalStateException] {
+      Graph.stronglyConnectedComponents(
+        (0L to 3L).toDF("id"), cycles, maxOuter = 1)
+    }
+    assert(outer.getMessage.contains(
+      "stronglyConnectedComponents did not converge in 1 rounds"))
+    // a 6-node directed path: forward reachability needs 5 rounds
+    val path = (0L until 5L).map(i => (i, i + 1)).toDF("src", "dst")
+    val inner = intercept[IllegalStateException] {
+      Graph.stronglyConnectedComponents(
+        (0L to 5L).toDF("id"), path, maxInner = 2)
+    }
+    assert(inner.getMessage.contains(
+      "SCC inner propagation did not converge in 2 rounds"))
+    // K4 is a 3-core, one level past maxK = 2
+    val k4 = Seq((0L, 1L), (0L, 2L), (0L, 3L), (1L, 2L), (1L, 3L), (2L, 3L))
+      .toDF("src", "dst")
+    val core = intercept[IllegalStateException] {
+      Graph.coreNumbers((0L to 3L).toDF("id"), k4, maxK = 2)
+    }
+    assert(core.getMessage.contains("coreNumbers exceeded maxK=2"))
+  }
+
+  test("iterative kernels return no rows on an empty graph") {
+    val vertices = Seq.empty[Long].toDF("id")
+    val edges = Seq.empty[(Long, Long)].toDF("src", "dst")
+    assert(Graph.connectedComponents(vertices, edges).count() == 0)
+    assert(Graph.stronglyConnectedComponents(vertices, edges).count() == 0)
+    assert(Graph.coreNumbers(vertices, edges).count() == 0)
+    assert(Graph.labelPropagation(vertices, edges).count() == 0)
+  }
+
+  test("iterative kernels are invariant under edge and shuffle " +
+      "partitioning") {
+    // two 4-cliques joined by a bridge, a directed 3-cycle, a chain into
+    // it and an isolated vertex: every kernel does more than one round
+    def clique(ids: Seq[Long]) =
+      for { a <- ids; b <- ids if a < b } yield (a, b)
+    val edges = (clique(Seq(1L, 2L, 3L, 4L)) ++ clique(Seq(10L, 11L, 12L, 13L))
+      ++ Seq((4L, 10L), (20L, 21L), (21L, 22L), (22L, 20L), (23L, 24L),
+        (24L, 20L))).toDF("src", "dst")
+    val vertices = Seq(1L, 2L, 3L, 4L, 10L, 11L, 12L, 13L, 20L, 21L, 22L,
+      23L, 24L, 99L).toDF("id")
+    // pairs of ids share a seed community, so both level passes move
+    val seed = vertices.select(col("id"),
+      (col("id") / 2).cast("long").as("community"))
+    def all(e: org.apache.spark.sql.DataFrame) = Map(
+      "cc" -> Graph.connectedComponents(vertices, e),
+      "scc" -> Graph.stronglyConnectedComponents(vertices, e),
+      "lpa" -> Graph.labelPropagation(vertices, e),
+      "pagerank" -> Graph.pageRank(vertices, e),
+      "kcore" -> Graph.coreNumbers(vertices, e),
+      "louvain" -> Graph.louvainLevels(seed, e, levels = 2),
+      "leiden" -> Graph.leidenLevels(seed, e, levels = 2))
+      .map { case (k, df) => k -> df.orderBy("id").collect().toSeq }
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "1")
+      val one = all(edges.repartition(1))
+      spark.conf.set(key, "8")
+      val seven = all(edges.repartition(7))
+      for (k <- one.keys) assert(one(k) == seven(k), k)
+    } finally spark.conf.set(key, prev)
+  }
+
   test("sampling decisions are not periodic in the id") {
     // regression: the old mixer reduced id mod 1000003 BEFORE hashing, so
     // ids differing by that period always shared a fate

@@ -228,6 +228,19 @@ class GraphMatchSpec extends AnyFunSuite {
       Seq((1L, 3L), (7L, 2L)))
   }
 
+  test("graph-mark-components on an empty graph returns no rows, " +
+      "weak and strong") {
+    val c3 = new Catalog(spark)
+    c3.register("events", Seq((1L, 10L), (2L, 11L)).toDF("user_id", "event_id"))
+    for (kind <- Seq("weak", "strong")) {
+      val r = Kql.run(spark, c3,
+        s"""events | where event_id < 0 | project s = user_id, d = event_id
+           | | make-graph s --> d | graph-mark-components kind=$kind"""
+          .stripMargin).collect()
+      assert(r.isEmpty, kind)
+    }
+  }
+
   test("edge variable names must still be distinct") {
     val e = intercept[KqlParseException] {
       run("""edges | make-graph s --> d
