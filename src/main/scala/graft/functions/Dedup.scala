@@ -289,60 +289,6 @@ object Dedup {
       s"$path/buckets")
   }
 
-  /** Persist a [[HammingIndex]] as a BUCKETED catalog table (round 12 —
-    * the [[saveMinhashIndexBucketed]] twin for the perceptual-hash
-    * family): `<table>_buckets` bucket-sorted by (band, bucket), so the
-    * probe's one corpus-side equi-join reads pre-shuffled buckets and
-    * plans with ZERO corpus-side exchange — the nightly image/audio/
-    * video/simhash dedup probe shuffles only its own batch tuples, at
-    * every probe, forever. Same catalog caveat as the minhash form:
-    * bucketed tables cannot pin a file-set snapshot, so never evaluate a
-    * pre-append and a post-append load in ONE query tree (the
-    * rootPaths-equality reuse trap); the nightly one-probe-then-append
-    * shape never hits this. */
-  def saveHammingIndexBucketed(index: HammingIndex, table: String,
-      path: String, nBuckets: Int = 64): Unit = {
-    index.buckets.write.mode("overwrite").format("parquet")
-      .option("path", s"$path/buckets")
-      .bucketBy(nBuckets, "band", "bucket").sortBy("band", "bucket")
-      .saveAsTable(s"${table}_buckets")
-    val spark = index.buckets.sparkSession
-    import spark.implicits._
-    Seq(index.nBands).toDF("n_bands")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  /** Load a bucketed-table [[HammingIndex]] (catalog relation — the
-    * scan carries the bucket spec, so the probe join co-locates). */
-  def loadHammingIndexBucketed(spark: SparkSession, table: String,
-      path: String): HammingIndex =
-    HammingIndex(
-      spark.table(s"${table}_buckets"),
-      spark.read.parquet(s"$path/meta").collect().head.getAs[Int]("n_bands"))
-
-  /** APPEND survivors to a bucketed-table Hamming index — the batch's
-    * band tuples land in their key's bucket (one batch-sized shuffle);
-    * the corpus buckets are never rewritten. saveAsTable(append)
-    * validates the spec against the catalog, so a drifted layout fails
-    * loudly instead of silently de-bucketing. */
-  def appendToHammingIndexBucketed(spark: SparkSession, table: String,
-      path: String, survivors: DataFrame,
-      idCol: String, hashCol: String): Unit = {
-    val nBands =
-      spark.read.parquet(s"$path/meta").collect().head.getAs[Int]("n_bands")
-    val nBuckets = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(
-        s"${table}_buckets"))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(
-        s"${table}_buckets exists but carries no bucket spec — it was " +
-          "not written by saveHammingIndexBucketed"))
-    hammingIndexRows(survivors, idCol, hashCol, nBands)
-      .write.mode("append").format("parquet")
-      .bucketBy(nBuckets, "band", "bucket").sortBy("band", "bucket")
-      .saveAsTable(s"${table}_buckets")
-  }
-
   /** The per-ingest probe against a prebuilt [[HammingIndex]]. */
   def incrementalHammingDedup(batch: DataFrame, index: HammingIndex,
       idCol: String, hashCol: String, maxDist: Int): DataFrame = {
@@ -914,86 +860,6 @@ object Dedup {
           .when(col("__hn").isNull, lit("removed"))
           .when(same, lit("unchanged"))
           .otherwise(lit("changed")).as("status"))
-  }
-
-  /** Persist a [[MinhashIndex]] as BUCKETED catalog tables — the
-    * 100 TB probe layout: `<table>_buckets` bucket-sorted by
-    * (band, bucket) and `<table>_sets` by __cid, so BOTH corpus-side
-    * joins of every nightly probe (the band-bucket candidate join and
-    * the __cid Jaccard-verify join) read pre-shuffled buckets and plan
-    * with ZERO corpus-side exchange — only the batch's own small sides
-    * shuffle, at every probe, forever (BucketedJoinSpec's co-location
-    * contract applied to the index). The catalog-free
-    * [[saveMinhashIndex]] stays the format-portable form; this one needs
-    * a catalog.
-    */
-  def saveMinhashIndexBucketed(index: MinhashIndex, table: String,
-      path: String, nBuckets: Int = 64): Unit = {
-    index.sets.write.mode("overwrite").format("parquet")
-      .option("path", s"$path/sets")
-      .bucketBy(nBuckets, "__cid").sortBy("__cid")
-      .saveAsTable(s"${table}_sets")
-    index.buckets.write.mode("overwrite").format("parquet")
-      .option("path", s"$path/buckets")
-      .bucketBy(nBuckets, "band", "bucket").sortBy("band", "bucket")
-      .saveAsTable(s"${table}_buckets")
-    val spark = index.sets.sparkSession
-    import spark.implicits._
-    Seq((index.n, index.k, index.rowsPerBand))
-      .toDF("n", "k", "rows_per_band")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/meta")
-  }
-
-  /** Load a bucketed-table [[MinhashIndex]] (catalog relations — the
-    * scans carry the bucket spec, so probe joins co-locate).
-    *
-    * CAVEAT, stated honestly: unlike [[loadMinhashIndex]], a catalog
-    * table CANNOT pin its file-set snapshot (reading explicit files
-    * would drop the bucket spec — the whole point of this form), so the
-    * rootPaths-equality reuse trap applies: do NOT evaluate a pre-append
-    * and a post-append load of the same table inside ONE query tree
-    * (exchange/AQE-stage reuse can serve the pre-append corpus stage to
-    * the post-append probe). The nightly production shape — one probe
-    * action, then the append, each its own job — never hits this; the
-    * build→probe→append→probe-in-one-tree gate shape must use the
-    * catalog-free form, whose loads are pinned snapshots. */
-  def loadMinhashIndexBucketed(spark: SparkSession, table: String,
-      path: String): MinhashIndex = {
-    val meta = spark.read.parquet(s"$path/meta").collect().head
-    MinhashIndex(
-      spark.table(s"${table}_sets"),
-      spark.table(s"${table}_buckets"),
-      meta.getAs[Int]("n"), meta.getAs[Int]("k"),
-      meta.getAs[Int]("rows_per_band"))
-  }
-
-  /** APPEND survivors to a bucketed-table index — rows land in their
-    * key's bucket (one batch-sized shuffle into the bucket layout), the
-    * corpus buckets are never rewritten, and the co-location contract
-    * holds for the grown table. */
-  def appendToMinhashIndexBucketed(spark: SparkSession, table: String,
-      path: String, survivors: DataFrame,
-      idCol: String, textCol: String): Unit = {
-    val meta = spark.read.parquet(s"$path/meta").collect().head
-    val nBuckets = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(
-        s"${table}_buckets"))
-      .bucketSpec.map(_.numBuckets)
-    val (sets, buckets) = minhashIndexRows(survivors, idCol, textCol,
-      meta.getAs[Int]("n"), meta.getAs[Int]("k"),
-      meta.getAs[Int]("rows_per_band"))
-    // saveAsTable(append) additionally validates the spec against the
-    // catalog, so a drifted layout fails loudly instead of silently
-    // de-bucketing
-    val nb = nBuckets.getOrElse(throw new IllegalStateException(
-      s"${table}_buckets exists but carries no bucket spec — it was not " +
-        "written by saveMinhashIndexBucketed"))
-    sets.write.mode("append").format("parquet")
-      .bucketBy(nb, "__cid").sortBy("__cid")
-      .saveAsTable(s"${table}_sets")
-    buckets.write.mode("append").format("parquet")
-      .bucketBy(nb, "band", "bucket").sortBy("band", "bucket")
-      .saveAsTable(s"${table}_buckets")
   }
 
   /** Rewrite one persisted parquet table into `numFiles` consolidated

@@ -943,18 +943,17 @@ object Graph {
       .select(col("id"), col("cluster_id").as("community"))
 
   /** Shared core of [[communityConnectivity]] and [[splitDisconnected]]:
-    * ((id, community) pinned, (id, cluster_id)) where cluster_id labels
-    * the vertex's component in the intra-community-edge-restricted
-    * graph. One global CC run covers every community at once —
-    * components cannot span communities. */
+    * ((id, community), (id, cluster_id)) where cluster_id labels the
+    * vertex's component in the intra-community-edge-restricted graph.
+    * One global CC run covers every community at once — components
+    * cannot span communities. The assignment is not pinned here: two
+    * jobs read it (the intra-edge pin and CC's first round), and for a
+    * one-pass plan such as the Leiden repair's move pass that re-read
+    * costs fewer jobs, stages and tasks than a pin job. A caller whose
+    * assignment is costly to recompute pins it first. */
   private def intraComponents(
       assignment: DataFrame, edges: DataFrame): (DataFrame, DataFrame) = {
-    // pin the assignment once: four consumers read it (two edge-endpoint
-    // joins, the CC vertex seed, the caller's group/final join) —
-    // without the pin an ITERATIVE upstream plan (LPA seed + refine is
-    // the typical caller) re-executes per consumer
     val lab = assignment.select(col("id"), col("community"))
-      .localCheckpoint()
     val intra = edges
       .join(lab.select(col("id").as("src"), col("community").as("__cs")),
         "src")

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * On-disk layout under `dir`:
   *  - `postings/` (token, doc_id, tf) — the inverted index proper. A probe
   *    filters it to the query's terms, so parquet dictionary/min-max
-  *    pruning (and the bucketed catalog form's layout) keeps the read
-  *    proportional to the matched postings, never the corpus.
+  *    pruning keeps the read proportional to the matched postings, never
+  *    the corpus.
   *  - `lens/` (doc_id, dl) — per-document token counts for the BM25
   *    length normalization.
   *  - `meta/` — one row PER WRITE: (n_docs_delta, total_dl_delta, k1, b).
@@ -303,112 +303,24 @@ object Retrieval {
     recountBm25Meta(spark, dir)
   }
 
-  /** Persist the index as BUCKETED catalog tables — the serving layout:
-    * `<table>_postings` bucket-sorted by `token` and `<table>_lens` by
-    * `doc_id`, so a probe's df aggregate reads pre-partitioned token
-    * buckets with NO exchange, the lens side of the score join reads
-    * pre-partitioned doc buckets, and the per-document score pivot
-    * reuses the join's doc_id partitioning — the only exchange left in
-    * a probe is the query-terms' own (tiny) filtered postings moving to
-    * their doc buckets. The catalog-free [[saveBm25Index]] stays the
-    * format-portable form; this one needs a catalog, and shares the
-    * bucketed-MinHash caveat: catalog tables cannot pin a file-set
-    * snapshot, so do not evaluate pre- and post-append loads of the same
-    * table inside one query tree. */
-  def saveBm25IndexBucketed(docs: DataFrame, idCol: String,
-      textCol: String, table: String, path: String, nBuckets: Int = 64,
-      k1: Double = 1.2, b: Double = 0.75): Unit = {
-    val spark = docs.sparkSession
-    val (postings, lens) = bm25IndexRows(docs, idCol, textCol)
-    postings.write.mode("overwrite").format("parquet")
-      .option("path", s"$path/postings")
-      .bucketBy(nBuckets, "token").sortBy("token")
-      .saveAsTable(s"${table}_postings")
-    lens.write.mode("overwrite").format("parquet")
-      .option("path", s"$path/lens")
-      .bucketBy(nBuckets, "doc_id").sortBy("doc_id")
-      .saveAsTable(s"${table}_lens")
-    // the data tables are catalog-owned; the meta delta ledger is an
-    // ordinary versioned table, like the catalog-free form's
-    Dedup.saveParquet(
-      spark.table(s"${table}_lens")
-        .agg(count(lit(1)).as("n_docs_delta"),
-          coalesce(sum("dl"), lit(0L)).as("total_dl_delta"))
-        .select(col("n_docs_delta"), col("total_dl_delta"),
-          lit(k1).as("k1"), lit(b).as("b"))
-        .coalesce(1),
-      s"$path/meta")
-  }
-
-  /** Load the bucketed-table form (catalog relations — scans carry the
-    * bucket spec, so probe plans co-locate). */
-  def loadBm25IndexBucketed(spark: SparkSession, table: String,
-      path: String): Bm25Index = {
-    // meta through the snapshot read chokepoint, like loadBm25Index
-    // (the data tables are catalog-owned and cannot be versioned, but
-    // the meta ledger is an ordinary versioned table)
-    val meta = spark.read
-      .parquet(Dedup.snapshotFiles(spark, s"$path/meta"): _*)
-      .agg(sum("n_docs_delta").as("n"), sum("total_dl_delta").as("t"),
-        max("k1").as("k1"), max("b").as("b"))
-      .collect().head
-    require(!meta.isNullAt(meta.fieldIndex("k1")) &&
-        !meta.isNullAt(meta.fieldIndex("b")),
-      s"BM25 index $table has no build-time k1/b parameters — it was " +
-        "created by append alone, never by saveBm25IndexBucketed")
-    Bm25Index(spark.table(s"${table}_postings"),
-      spark.table(s"${table}_lens"),
-      meta.getAs[Long]("n"), meta.getAs[Long]("t"),
-      meta.getAs[Double]("k1"), meta.getAs[Double]("b"))
-  }
-
-  /** APPEND a batch to the bucketed tables: rows land in their key's
-    * bucket (one batch-sized shuffle each), the corpus buckets are never
-    * rewritten, and `saveAsTable(append)` validates the spec against the
-    * catalog so a drifted layout fails loudly. `skipExisting` is the
-    * same re-delivery guard as [[appendToBm25Index]]'s — here the lens
-    * probe additionally rides the bucketed layout (the broadcast
-    * semi-join reads only the batch ids' buckets' doc_id column). */
-  def appendToBm25IndexBucketed(batch0: DataFrame, idCol: String,
-      textCol: String, table: String, path: String,
-      skipExisting: Boolean = false): Unit = {
-    val batch = if (!skipExisting) batch0 else {
-      val sp = batch0.sparkSession
-      val ids = batch0.select(col(idCol).as("doc_id")).distinct()
-      val already = sp.table(s"${table}_lens")
-        .join(broadcast(ids), Seq("doc_id"), "left_semi")
-        .select(col("doc_id"))
-      batch0.join(broadcast(already),
-        batch0(idCol) === already("doc_id"), "left_anti")
-    }
-    val spark = batch.sparkSession
-    val nb = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(
-        s"${table}_postings"))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(
-        s"${table}_postings exists but carries no bucket spec — it was " +
-          "not written by saveBm25IndexBucketed"))
-    val (postings, lens) = bm25IndexRows(batch, idCol, textCol)
-    postings.write.mode("append").format("parquet")
-      .bucketBy(nb, "token").sortBy("token")
-      .saveAsTable(s"${table}_postings")
-    val pinnedLens = lens.localCheckpoint() // batch-bounded
-    pinnedLens.write.mode("append").format("parquet")
-      .bucketBy(nb, "doc_id").sortBy("doc_id")
-      .saveAsTable(s"${table}_lens")
-    // through the append chokepoint: a raw mode("append") file would be
-    // a manifest-invisible orphan and probes would undercount
-    // n_docs/total_dl
-    Dedup.appendParquet(
-      pinnedLens
-        .agg(count(lit(1)).as("n_docs_delta"),
-          coalesce(sum("dl"), lit(0L)).as("total_dl_delta"))
-        .select(col("n_docs_delta"), col("total_dl_delta"),
-          lit(null).cast("double").as("k1"),
-          lit(null).cast("double").as("b"))
-        .coalesce(1),
-      s"$path/meta")
+  /** Per-(token, doc) BM25 term scores of the matched postings `hits`:
+    * document frequencies aggregate from `hits` alone into a broadcast,
+    * only matching documents join `lens/`, and `__score_t` replays
+    * [[TextAnalysis.bm25]]'s arithmetic under the index's corpus
+    * statistics. The one scoring expression of [[bm25Probe]] and
+    * [[bm25ProbeMany]]. */
+  private def scoredHits(index: Bm25Index, hits: DataFrame): DataFrame = {
+    val dfq = hits.groupBy(col("token")).agg(count(lit(1)).as("df"))
+    hits
+      .join(broadcast(dfq), "token")
+      .join(index.lens, "doc_id")
+      .withColumn("__score_t",
+        (lit(index.nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5)) *
+          (col("tf") * lit(index.k1 + 1.0)) /
+          (col("tf") + lit(index.k1) *
+            (lit(1.0 - index.b) +
+              lit(index.b) * col("dl") * lit(index.nDocs) /
+                lit(index.totalDl))))
   }
 
   /** Serve a BM25 top-k from a loaded index. Probe cost ∝ the query
@@ -429,17 +341,7 @@ object Retrieval {
     require(terms.nonEmpty, "bm25 needs at least one query term")
     require(index.nDocs > 0, "bm25 probe over an empty index")
     val hits = index.postings.filter(col("token").isin(terms.map(lit): _*))
-    val dfq = hits.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    val scored = hits
-      .join(broadcast(dfq), "token")
-      .join(index.lens, "doc_id")
-      .withColumn("__score_t",
-        (lit(index.nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5)) *
-          (col("tf") * lit(index.k1 + 1.0)) /
-          (col("tf") + lit(index.k1) *
-            (lit(1.0 - index.b) +
-              lit(index.b) * col("dl") * lit(index.nDocs) /
-                lit(index.totalDl))))
+    val scored = scoredHits(index, hits)
     // pivot columns are named by term INDEX, not the raw term — a term
     // containing '.' or '`' would otherwise break col() resolution
     // (TextAnalysis.bm25 uses the same convention for the same reason)
@@ -492,17 +394,7 @@ object Retrieval {
     val allTerms = qt.select(col("token")).distinct()
     val hits = index.postings
       .join(broadcast(allTerms), Seq("token"), "left_semi")
-    val dfq = hits.groupBy(col("token")).agg(count(lit(1)).as("df"))
-    val scored = hits
-      .join(broadcast(dfq), "token")
-      .join(index.lens, "doc_id")
-      .withColumn("__score_t",
-        (lit(index.nDocs) - col("df") + lit(0.5)) / (col("df") + lit(0.5)) *
-          (col("tf") * lit(index.k1 + 1.0)) /
-          (col("tf") + lit(index.k1) *
-            (lit(1.0 - index.b) +
-              lit(index.b) * col("dl") * lit(index.nDocs) /
-                lit(index.totalDl))))
+    val scored = scoredHits(index, hits)
     val perQueryDoc = scored
       .join(qt.withColumnRenamed(queryIdCol, "__qid"), "token")
       .groupBy(col("__qid"), col("doc_id"))

@@ -1195,96 +1195,6 @@ object Similarity {
       numFiles: Int = 32): Unit =
     Dedup.compactParquetDir(spark, s"$path/cells", numFiles)
 
-  /** Persist an [[IvfIndex]] as a BUCKETED catalog table (round 12 —
-    * the [[graft.functions.Dedup.saveMinhashIndexBucketed]] twin for
-    * the embedding family): `<table>_cells` bucket-sorted by __cell, so
-    * [[incrementalSemDedupEqui]]'s corpus-side cell join reads
-    * pre-shuffled, pre-sorted buckets and plans with ZERO corpus-side
-    * exchange — only the batch's exploded (id, probe-cell) tuples
-    * shuffle, at every probe, forever. `nBuckets` should not exceed the
-    * index's nCells (cells are the only key values; extra buckets stay
-    * empty). Same catalog caveat as the minhash form: no pinned
-    * file-set snapshot, so never evaluate a pre-append and a
-    * post-append load in ONE query tree. */
-  def saveIvfIndexBucketed(index: IvfIndex, table: String,
-      path: String, nBuckets: Int = 16): Unit = {
-    val spark = index.cells.sparkSession
-    import spark.implicits._
-    index.cells.write.mode("overwrite").format("parquet")
-      .option("path", s"$path/cells")
-      .bucketBy(nBuckets, "__cell").sortBy("__cell")
-      .saveAsTable(s"${table}_cells")
-    index.centroids.zipWithIndex
-      .map { case (v, i) => (i, v.toSeq) }.toSeq
-      .toDF("cell", "vec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-  }
-
-  def loadIvfIndexBucketed(spark: SparkSession, table: String,
-      path: String): IvfIndex =
-    IvfIndex(spark.table(s"${table}_cells"), loadCentroids(spark, path))
-
-  /** APPEND survivors to a bucketed-table IVF index: assigned under the
-    * STORED centroids (frozen quantizer), landed in their cell's bucket
-    * — one batch-sized shuffle, corpus buckets never rewritten. */
-  def appendToIvfIndexBucketed(spark: SparkSession, table: String,
-      path: String, survivors: DataFrame,
-      idCol: String, vecCol: String): Unit = {
-    val nBuckets = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(
-        s"${table}_cells"))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(
-        s"${table}_cells exists but carries no bucket spec — it was " +
-          "not written by saveIvfIndexBucketed"))
-    val cents = loadCentroids(spark, path)
-    survivors
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
-      .withColumn("__cell", element_at(
-        nearestCells(col("__cv"), cents, 1), 1))
-      .write.mode("append").format("parquet")
-      .bucketBy(nBuckets, "__cell").sortBy("__cell")
-      .saveAsTable(s"${table}_cells")
-  }
-
-  /** The EQUI-JOIN form of the incremental SemDeDup probe — output-
-    * identical to [[incrementalSemDedup]] (PipelineSpec asserts it),
-    * different physical shape for a different regime:
-    *
-    *  - [[incrementalSemDedup]] joins on `array_contains(__cells,
-    *    __cell)` — a broadcast nested-loop with the batch broadcast.
-    *    Right when the batch is broadcast-small: the corpus streams
-    *    with no shuffle and each row pays an O(nProbe) membership test.
-    *  - this form EXPLODES the batch's nProbe probe cells into
-    *    (id, cell) rows and equi-joins on the cell — the shape for
-    *    corpus-scale batches (a backfill reprocessing an old crawl),
-    *    where broadcasting the batch is impossible and a nested-loop
-    *    would be quadratic. Against a BUCKETED index
-    *    ([[saveIvfIndexBucketed]]) the corpus side reads pre-shuffled,
-    *    pre-sorted buckets: zero corpus-side exchange, only the
-    *    exploded batch tuples shuffle (BucketedJoinSpec pins the plan).
-    */
-  def incrementalSemDedupEqui(
-      batch: DataFrame, index: IvfIndex, idCol: String, vecCol: String,
-      threshold: Double, nProbe: Int): DataFrame = {
-    val b = batch.select(col(idCol).as("__bid"), col(vecCol).as("__bv"))
-      .withColumn("__cells",
-        nearestCells(col("__bv"), index.centroids, nProbe))
-      .localCheckpoint() // one nearestCells pass, shared by probe + keep
-    val probes = b
-      .select(col("__bid"), col("__bv"),
-        explode(col("__cells")).as("__cell"))
-    val c = index.cells.select(
-      col("neighbor_id").as("__cid"), col("__cv"), col("__cell"))
-    val drops = probes
-      .join(c, Seq("__cell"))
-      .filter(cosine(col("__bv"), col("__cv")) >= threshold)
-      .select(col("__bid")).distinct()
-    b.join(drops, Seq("__bid"), "left_anti")
-      .select(col("__bid").as(idCol),
-        element_at(col("__cells"), 1).as("cell"))
-  }
-
   /** A built PQ corpus index (round 12 — the codebook-lifecycle member
     * of the index family next to [[graft.functions.Dedup.MinhashIndex]],
     * `HammingIndex` and [[IvfIndex]]): the byte-coded corpus rows

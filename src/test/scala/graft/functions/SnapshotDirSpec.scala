@@ -332,9 +332,15 @@ class SnapshotDirSpec extends AnyFunSuite {
       Seq((9L, Seq(0.95f, 0.05f))).toDF("vec_id", "emb"), i,
       "vec_id", "emb", threshold = 0.9, nProbe = 2)
       .collect().map(_.getLong(0)).toSet
-    assert(ivProbe(Similarity.loadIvfIndex(spark, ivDir)) == ivProbe(
+    val ivAppended = ivProbe(Similarity.loadIvfIndex(spark, ivDir))
+    assert(ivAppended == ivProbe(
       Similarity.ivfIndex(vecs.unionByName(vBatch), "vec_id", "emb",
         nCells = 2)))
+    // compaction commits v3 as one file and serves the same probe
+    Similarity.compactIvfIndex(spark, ivDir, numFiles = 1)
+    assert(SnapshotDir.versions(spark, s"$ivDir/cells") == Seq(1L, 2L, 3L))
+    assert(Dedup.snapshotFiles(spark, s"$ivDir/cells").size == 1)
+    assert(ivProbe(Similarity.loadIvfIndex(spark, ivDir)) == ivAppended)
 
     // PQ and IVF-PQ: the batch encodes under the frozen stored books
     // (and, for IVF-PQ, takes its nearest stored centroid's cell)
