@@ -2121,8 +2121,10 @@ final class Compiler(
             case _ => throw KqlParseException(
               "topk_estimate() k must be an integer literal", 0)
           }
-          call_function("approx_top_k_estimate",
-            compile(df, args.head), lit(k))
+          // the estimate reads its state unguarded: a null state (the
+          // merge of no sketches) must stay null instead of failing
+          val state = compile(df, args.head)
+          when(state.isNotNull, call_function("approx_top_k_estimate", state, lit(k)))
         case "array_length" => size(compile(df, args.head)).cast(LongType)
         // null args are skipped entirely (concat_ws semantics — DuckDB's
         // concat_ws agrees, so both engines render the same string)
@@ -5325,8 +5327,12 @@ final class Compiler(
           call_function("approx_top_k", compileField(df, f), lit(k))
         case Aggregation.TopKAccum(f) =>
           call_function("approx_top_k_accumulate", compileField(df, f))
-        case Aggregation.TopKMerge(f) =>
-          call_function("approx_top_k_combine", compileField(df, f))
+        // the combine wrapped so an empty partition's buffer is safe
+        case Aggregation.TopKMerge(f) => {
+          import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+          column(graft.functions.TopKCombine(expression(compileField(df, f)))
+            .toAggregateExpression())
+        }
         // sample (n−1) forms, KQL convention; empty/singleton groups → null
         case Aggregation.Stdev(f) => stddev_samp(numeric(f))
         case Aggregation.Variance(f) => var_samp(numeric(f))

@@ -1,6 +1,6 @@
 package graft.kql
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSortedCollect, SparkSession}
 
 /** Public facade: KQL text → DataFrame (the whole engine in one call).
   *
@@ -43,7 +43,16 @@ object Kql {
     val compiler = new Compiler(spark, catalog, parsed.lets,
       materializedLets = parsed.materialized)
     val df = compiler.compile(parsed.query)
-    val plan = df.queryExecution.optimizedPlan.toString
+    // a root sort is served partition-local with its runs merged on the
+    // driver (QueryServer): show that plan, not a global sort's range
+    // exchange the server never runs
+    val plan = GraftSortedCollect.localSort(df) match {
+      case Some(local) =>
+        local.queryExecution.optimizedPlan.toString +
+          "\n--- spark physical plan (sorted runs merged on the driver) ---\n" +
+          local.queryExecution.executedPlan
+      case None => df.queryExecution.optimizedPlan.toString
+    }
     // the plan string is captured — release the materialize() cache
     // entries immediately so repeated /explain calls can't pin storage
     compiler.releaseMaterialized()

@@ -6,7 +6,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+import org.apache.spark.JobExecutionStatus
+import org.apache.spark.sql.{GraftSortedCollect, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import graft.kql.{Aggregation, Catalog, Compiler, Kql, KqlParseException, Parsed, Query, QueryStep}
 
@@ -29,16 +31,25 @@ import graft.kql.{Aggregation, Catalog, Compiler, Kql, KqlParseException, Parsed
   *
   * Cancellation (`http_server.rs:345-349`, `cancel_iter.rs`): every query
   * runs in its own Spark job group; a failed SSE write (client went away)
-  * cancels the group, so a shared cluster stops paying for abandoned
-  * queries. A keepalive comment frame probes the connection while the
-  * handler thread is blocked inside a Spark job.
+  * cancels the group's running jobs and any it would start later (a
+  * disconnect seen between two jobs of one query stops the rest), so a
+  * shared cluster stops paying for abandoned queries. A keepalive comment
+  * frame probes the connection while the handler thread is blocked inside
+  * a Spark job.
   *
   * Security: binds loopback by default; `raw("…")` (arbitrary Spark SQL —
   * it can read any local file) is refused unless `allowRaw` is set.
   *
-  * Scale note: rows stream through `toJSON.toLocalIterator`, so the driver
-  * holds one partition at a time, never the full result — the moral
-  * equivalent of miso's channel-fed SSE writer.
+  * Scale note: a result whose root is a `sort by` is served like miso's
+  * in-memory `sort` (`miso-workflow/src/sort.rs`): one Spark job sorts
+  * each partition, and the driver merges the sorted runs and holds the
+  * whole result before its first row is sent
+  * ([[org.apache.spark.sql.GraftSortedCollect]]). A global Spark sort
+  * would cost a range-sample job and a shuffle on top of the result job.
+  * Every other result streams through `toJSON.toLocalIterator`, so the
+  * driver holds one partition at a time — the moral equivalent of miso's
+  * channel-fed SSE writer (a small result is one partition either way:
+  * adaptive execution coalesces it).
   */
 final class QueryServer(
     spark: SparkSession, catalog: Catalog, port: Int,
@@ -194,16 +205,24 @@ final class QueryServer(
     val alive = new AtomicBoolean(true)
     // keepalive probe: while this thread is blocked inside a Spark job the
     // only way to notice a vanished client is to write to it — SSE comment
-    // frames are protocol-noise to clients and broken pipes to us
+    // frames are protocol-noise to clients and broken pipes to us. It
+    // probes only while one of this query's jobs runs: that is when an
+    // abandoned query costs the cluster, and a sorted result sends no row
+    // before its job ends. The first write after the client left only
+    // draws its reset and the next one fails, so at 100 ms a running job
+    // is cancelled about 200 ms after its client left.
+    val tracker = spark.sparkContext.statusTracker
+    def jobRunning = tracker.getJobIdsForGroup(groupId).exists(id =>
+      tracker.getJobInfo(id).exists(_.status == JobExecutionStatus.RUNNING))
     val watchdog = new Thread(() => {
       while (alive.get()) {
-        Thread.sleep(250)
-        if (alive.get()) {
+        Thread.sleep(100)
+        if (alive.get() && jobRunning) {
           try lock.synchronized { out.write(": keepalive\n\n".getBytes(UTF_8)); out.flush() }
           catch {
             case _: IOException =>
               alive.set(false)
-              spark.sparkContext.cancelJobGroup(groupId)
+              spark.sparkContext.cancelJobGroupAndFutureJobs(groupId)
           }
         }
       }
@@ -211,7 +230,10 @@ final class QueryServer(
     watchdog.setDaemon(true)
     watchdog.start()
     try {
-      val it = df.toJSON.toLocalIterator()
+      // a root sort runs as one job (partitions sorted, runs merged on
+      // the driver); every other root streams partition by partition
+      val it = GraftSortedCollect.sortedJson(df)
+        .getOrElse(df.toJSON.toLocalIterator().asScala)
       while (alive.get() && it.hasNext) {
         val row = it.next()
         lock.synchronized { out.write(s"data: $row\n\n".getBytes(UTF_8)); out.flush() }
@@ -222,7 +244,7 @@ final class QueryServer(
     } catch {
       case _: IOException =>
         outcome = "canceled"
-        spark.sparkContext.cancelJobGroup(groupId)
+        spark.sparkContext.cancelJobGroupAndFutureJobs(groupId)
       case e: Exception =>
         // a job killed by the watchdog's cancel surfaces here as a
         // SparkException — not an error worth reporting to a gone client
@@ -299,7 +321,7 @@ final class QueryServer(
                 // client went away mid-stream: stop the streaming query and
                 // anything else this request started
                 disconnected = true
-                spark.sparkContext.cancelJobGroup(groupId)
+                spark.sparkContext.cancelJobGroupAndFutureJobs(groupId)
             }
           }
           if (!disconnected) {

@@ -2,9 +2,12 @@ package graft.server
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerTaskEnd, SparkListenerTaskStart}
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.kql.Catalog
+import graft.kql.{Catalog, Kql}
 
 /** End-to-end HTTP/SSE API tests — the analog of the reference's server
   * integration tests: POST a KQL query, read SSE rows back.
@@ -299,7 +302,9 @@ class QueryServerSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
-  test("client disconnect cancels the query's Spark jobs") {
+  /** Sends `kql` over a raw socket, waits until its jobs run, closes the
+    * socket and asserts that every job and every task ends soon after. */
+  private def assertDisconnectCancels(kql: String): Unit = {
     val cat = Catalog.forTestData(spark, graft.TestSpark.sf)
     // a query that takes several seconds on 4 local cores: full scan of a
     // wide synthetic range with a hash per row
@@ -307,9 +312,16 @@ class QueryServerSpec extends AnyFunSuite {
       spark.range(0L, 12000000000L, 1L, 8)
         .selectExpr("hash(id) AS h"))
     val srv = QueryServer.start(spark, cat)
+    // task ids, so an end whose start reached the bus before this
+    // listener joined cannot make the count negative
+    val running = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    val tasks = new SparkListener {
+      override def onTaskStart(e: SparkListenerTaskStart): Unit = running.add(e.taskInfo.taskId)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = running.remove(e.taskInfo.taskId)
+    }
+    spark.sparkContext.addSparkListener(tasks)
     try {
       val sock = new java.net.Socket("127.0.0.1", srv.boundPort)
-      val kql = "slow | summarize s=sum(h)"
       val req = s"POST /query HTTP/1.1\r\nHost: localhost\r\nContent-Length: ${kql.length}\r\n" +
         s"Content-Type: text/plain\r\n\r\n$kql"
       sock.getOutputStream.write(req.getBytes("UTF-8"))
@@ -321,14 +333,32 @@ class QueryServerSpec extends AnyFunSuite {
         Thread.sleep(50)
       assert(tracker.getActiveJobIds().nonEmpty, "slow query never started")
       sock.close()
-      // the keepalive probe should hit the broken pipe and cancel the group
+      // the keepalive probe should hit the broken pipe and cancel the group;
+      // a cancelled job is inactive at once, so also wait for its tasks:
+      // a task that never checks for its kill keeps the cores busy
       val t1 = System.currentTimeMillis()
-      while (tracker.getActiveJobIds().nonEmpty && System.currentTimeMillis() - t1 < 15000)
+      while ((tracker.getActiveJobIds().nonEmpty || !running.isEmpty) &&
+        System.currentTimeMillis() - t1 < 15000)
         Thread.sleep(100)
       val lingering = tracker.getActiveJobIds()
       assert(lingering.isEmpty,
         s"jobs still active ${System.currentTimeMillis() - t1}ms after disconnect: ${lingering.mkString(",")}")
-    } finally srv.stop()
+      assert(running.isEmpty,
+        s"${running.size} tasks still running ${System.currentTimeMillis() - t1}ms after disconnect")
+    } finally {
+      spark.sparkContext.removeSparkListener(tasks)
+      srv.stop()
+    }
+  }
+
+  test("client disconnect cancels the query's Spark jobs") {
+    assertDisconnectCancels("slow | summarize s=sum(h)")
+  }
+
+  test("client disconnect cancels the jobs of a sorted result") {
+    // the sorted path holds the whole result before its first row, so
+    // only the keepalive probe can notice the client has gone
+    assertDisconnectCancels("slow | summarize s = sum(h) by b = h % 7 | sort by b")
   }
 
   test("stop() terminates the handler pool's threads") {
@@ -350,5 +380,117 @@ class QueryServerSpec extends AnyFunSuite {
     before.foreach(_.join(10000))
     assert(before.forall(!_.isAlive),
       s"handler threads alive after stop(): ${handlers.map(_.getName)}")
+  }
+
+  // ───────── sorted results: one job, partition runs merged on the driver ─────────
+
+  /** 400 rows in 4 range partitions (no shuffle): `k` is a permutation of
+    * 0..399, `g` splits it 4 ways, `kn` is `k` with one null. */
+  private def split4(s: SparkSession) = s.range(0L, 400L, 1L, 4).selectExpr(
+    "id", "(id * 7919) % 400 AS k", "id % 4 AS g",
+    "CASE WHEN id = 13 THEN NULL ELSE (id * 7919) % 400 END AS kn",
+    "CAST((id * 7919) % 400 AS STRING) AS ks")
+
+  /** A server over `split4` in a fresh session with adaptive execution
+    * on or off; the session keeps the server's query listener to itself. */
+  private def withSplitServer[T](aqe: Boolean)(f: (String, SparkSession, Catalog) => T): T = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", aqe.toString)
+    val cat = new Catalog(s)
+    cat.register("split4", split4(s))
+    val srv = QueryServer.start(s, cat)
+    try f(s"http://localhost:${srv.boundPort}", s, cat) finally srv.stop()
+  }
+
+  private def postTo(url: String, body: String): HttpResponse[String] =
+    client.send(
+      HttpRequest.newBuilder(URI.create(url))
+        .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+      HttpResponse.BodyHandlers.ofString())
+
+  private def rowsOf(r: HttpResponse[String]): Seq[String] = {
+    assert(r.statusCode() == 200, r.body())
+    assert(r.body().contains("event: done"), r.body())
+    r.body().split("\n").toSeq.filter(_.startsWith("data: {")).map(_.stripPrefix("data: "))
+  }
+
+  /** Jobs per server job group started while `body` runs. */
+  private def serverJobs(body: => Unit): Map[String, Int] = {
+    import java.util.concurrent.ConcurrentHashMap
+    import scala.jdk.CollectionConverters._
+    val started = new ConcurrentHashMap[Int, String]()
+    val ended = ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith("graft-query-")).foreach(started.put(e.jobId, _))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      // listener delivery is asynchronous: wait for every started job's end
+      val t0 = System.currentTimeMillis()
+      def settled = !started.isEmpty && started.keySet.asScala.forall(ended.contains)
+      while (!settled && System.currentTimeMillis() - t0 < 10000) Thread.sleep(50)
+      Thread.sleep(300)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    started.asScala.toSeq.groupBy(_._2).map { case (g, js) => g -> js.size }
+  }
+
+  test("sorted results stream in the batch order over a table split 4 ways") {
+    val sorts = Seq("k asc", "k desc", "g asc, k desc", "ks asc",
+      "kn asc nulls first", "kn asc nulls last", "kn desc nulls first", "kn desc nulls last")
+    for (aqe <- Seq(false, true)) withSplitServer(aqe) { (base, s, cat) =>
+      for (by <- sorts) withClue(s"aqe=$aqe, sort by $by: ") {
+        val kql = s"split4 | sort by $by"
+        val got = rowsOf(postTo(s"$base/query", kql))
+        assert(got.length == 400)
+        assert(got == Kql.run(s, cat, kql).toJSON.collect().toSeq)
+      }
+    }
+  }
+
+  test("a where | sort request runs exactly one job") {
+    for (aqe <- Seq(false, true)) withSplitServer(aqe) { (base, s, cat) =>
+      val kql = "split4 | where g != 2 | project k, kn | sort by k desc"
+      var got = Seq.empty[String]
+      val jobs = serverJobs { got = rowsOf(postTo(s"$base/query", kql)) }
+      withClue(s"aqe=$aqe: ") {
+        assert(jobs.size == 1 && jobs.values.head == 1, jobs)
+        assert(got.length == 300)
+        assert(got == Kql.run(s, cat, kql).toJSON.collect().toSeq)
+      }
+    }
+  }
+
+  test("each sorted request counts once in graft_queries_total") {
+    withSplitServer(aqe = true) { (base, _, _) =>
+      def ok(): Long = """graft_queries_total\{outcome="success"\} (\d+)""".r
+        .findFirstMatchIn(client.send(
+          HttpRequest.newBuilder(URI.create(s"$base/metrics")).GET().build(),
+          HttpResponse.BodyHandlers.ofString()).body())
+        .map(_.group(1).toLong).getOrElse(-1L)
+      val before = ok()
+      val texts = Seq("split4 | sort by k", "split4 | where g == 1 | sort by kn desc",
+        "split4 | summarize n = count() by g | sort by g")
+      texts.foreach(t => assert(rowsOf(postTo(s"$base/query", t)).nonEmpty))
+      // QueryExecutionListener delivery is async — poll, then give a late
+      // second count time to show
+      val t0 = System.currentTimeMillis()
+      while (ok() < before + texts.size && System.currentTimeMillis() - t0 < 10000) Thread.sleep(100)
+      Thread.sleep(500)
+      assert(ok() == before + texts.size)
+    }
+  }
+
+  test("POST /explain of a root sort shows the partition-local sort the server runs") {
+    val r = post("/explain", """{"query": "events | where value > 1 | sort by event_id asc"}""")
+    assert(r.statusCode() == 200)
+    assert(r.body().contains("sorted runs merged on the driver"), r.body())
+    assert(!r.body().toLowerCase.contains("rangepartitioning"), r.body())
+    assert(r.body().contains("Sort [event_id"), r.body())
+    // any other root keeps the plain optimized plan
+    assert(!post("/explain", "events | count").body().contains("merged on the driver"))
   }
 }
