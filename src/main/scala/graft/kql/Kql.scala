@@ -45,11 +45,12 @@ object Kql {
     val df = compiler.compile(parsed.query)
     // a root sort is served partition-local with its runs merged on the
     // driver (QueryServer): show that plan, not a global sort's range
-    // exchange the server never runs
+    // exchange the server runs only for a result over the merge cap
     val plan = GraftSortedCollect.localSort(df) match {
       case Some(local) =>
         local.queryExecution.optimizedPlan.toString +
-          "\n--- spark physical plan (sorted runs merged on the driver) ---\n" +
+          "\n--- spark physical plan (sorted runs merged on the driver; a result over " +
+          s"${GraftSortedCollect.MaxBytes >> 20} MB streams as a global sort) ---\n" +
           local.queryExecution.executedPlan
       case None => df.queryExecution.optimizedPlan.toString
     }

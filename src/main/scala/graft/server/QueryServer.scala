@@ -3,11 +3,12 @@ package graft.server
 import java.io.{IOException, OutputStream}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.JobExecutionStatus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{GraftSortedCollect, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import graft.kql.{Aggregation, Catalog, Compiler, Kql, KqlParseException, Parsed, Query, QueryStep}
@@ -46,10 +47,15 @@ import graft.kql.{Aggregation, Catalog, Compiler, Kql, KqlParseException, Parsed
   * whole result before its first row is sent
   * ([[org.apache.spark.sql.GraftSortedCollect]]). A global Spark sort
   * would cost a range-sample job and a shuffle on top of the result job.
-  * Every other result streams through `toJSON.toLocalIterator`, so the
-  * driver holds one partition at a time — the moral equivalent of miso's
-  * channel-fed SSE writer (a small result is one partition either way:
-  * adaptive execution coalesces it).
+  * The held rows are capped at miso's 500 MB: a larger sorted result runs
+  * again as a global sort and streams like any other. Every other result
+  * streams through `toJSON.toLocalIterator`, so the driver holds one
+  * partition at a time — the moral equivalent of miso's channel-fed SSE
+  * writer (a small result is one partition either way: adaptive
+  * execution coalesces it). The sorted path's one collect is also bounded
+  * by `spark.driver.maxResultSize` (compressed bytes, 1 GiB by default): a
+  * sorted result past that fails in-band instead of taking the streamed
+  * path.
   */
 final class QueryServer(
     spark: SparkSession, catalog: Catalog, port: Int,
@@ -69,6 +75,16 @@ final class QueryServer(
   // silently nulled by try_* lowerings — casts, todynamic parses, ÷0 —
   // counted via Compiler.errorCounter and exposed in /metrics
   private val rowsNulled = spark.sparkContext.longAccumulator("graft_rows_nulled")
+  // job id -> job group of this server's running jobs, for the keepalive
+  // probe's "is a job of this request running" (a running-jobs map stays
+  // as small as the cluster's concurrency; the status store keeps history)
+  private val runningJobs = new ConcurrentHashMap[Int, String]()
+  private val jobWatch = new SparkListener {
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).flatMap(p => Option(p.getProperty(QueryServer.JobGroupKey)))
+        .filter(_.startsWith(QueryServer.GroupPrefix)).foreach(runningJobs.put(e.jobId, _))
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = runningJobs.remove(e.jobId)
+  }
 
   def boundPort: Int = server.getAddress.getPort
 
@@ -92,12 +108,14 @@ final class QueryServer(
       handle(ex, e => respond(e, 200, "ok")))
     server.setExecutor(handlerPool)
     spark.listenerManager.register(metrics)
+    spark.sparkContext.addSparkListener(jobWatch)
     server.start()
     this
   }
 
   def stop(): Unit = {
     spark.listenerManager.unregister(metrics)
+    spark.sparkContext.removeSparkListener(jobWatch)
     server.stop(0)
     handlerPool.shutdown()
     handlerPool.awaitTermination(10, java.util.concurrent.TimeUnit.SECONDS)
@@ -155,25 +173,30 @@ final class QueryServer(
     val req = reqOf(ex)
     val parsed = Kql.parse(req.kql)
     checkRaw(parsed)
-    val groupId = s"graft-query-${QueryServer.ids.incrementAndGet()}"
+    val groupId = s"${QueryServer.GroupPrefix}${QueryServer.ids.incrementAndGet()}"
     val status = statusWriter.map(_.start(groupId, req.kql))
     // thread-local group: every job this handler thread submits joins it,
     // so a disconnect can cancel exactly this query's work
     spark.sparkContext.setJobGroup(groupId, req.kql.take(200), interruptOnCancel = true)
-    try {
-      status.foreach(_.update("running"))
-      val outcome =
-        if (req.partial && QueryServer.partialEligible(parsed))
-          streamPartials(ex, parsed, req.debounceMs, groupId)
-        else
-          batchQuery(ex, parsed, groupId)
-      status.foreach(_.finish(outcome))
-    } catch {
-      case e: Exception =>
+    val outcome =
+      try {
+        status.foreach(_.update("running"))
+        Right(
+          if (req.partial && QueryServer.partialEligible(parsed))
+            streamPartials(ex, parsed, req.debounceMs, groupId)
+          else
+            batchQuery(ex, parsed, groupId))
+      } catch { case e: Exception => Left(e) }
+      // a disconnect cancels the group's later jobs too, so the record is
+      // closed from outside it: its upsert is a Spark job
+      finally spark.sparkContext.clearJobGroup()
+    outcome match {
+      case Right(o) => status.foreach(_.finish(o))
+      case Left(e) =>
         status.foreach(_.finish("error",
           Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(500))))
         throw e
-    } finally spark.sparkContext.clearJobGroup()
+    }
   }
 
   /** Open the SSE response and hand back the stream. Once the 200 + SSE
@@ -208,16 +231,17 @@ final class QueryServer(
     // frames are protocol-noise to clients and broken pipes to us. It
     // probes only while one of this query's jobs runs: that is when an
     // abandoned query costs the cluster, and a sorted result sends no row
-    // before its job ends. The first write after the client left only
-    // draws its reset and the next one fails, so at 100 ms a running job
-    // is cancelled about 200 ms after its client left.
-    val tracker = spark.sparkContext.statusTracker
-    def jobRunning = tracker.getJobIdsForGroup(groupId).exists(id =>
-      tracker.getJobInfo(id).exists(_.status == JobExecutionStatus.RUNNING))
+    // before its job ends. Not probing earlier also keeps every cancel
+    // visible to a SparkListener: a job refused at submission because its
+    // group is already cancelled posts no job event, and perfbench's
+    // serve_mixed cancellation check counts only cancelled jobs that
+    // started. The first write after the client left only draws its reset
+    // and the next one fails, so at 100 ms a running job is cancelled
+    // about 200 ms after its client left.
     val watchdog = new Thread(() => {
       while (alive.get()) {
         Thread.sleep(100)
-        if (alive.get() && jobRunning) {
+        if (alive.get() && runningJobs.containsValue(groupId)) {
           try lock.synchronized { out.write(": keepalive\n\n".getBytes(UTF_8)); out.flush() }
           catch {
             case _: IOException =>
@@ -305,10 +329,14 @@ final class QueryServer(
         var disconnected = false
         var outcome = "success"
         var lastKey: String = null
+        var lastBatch = -1L
         try {
           while (!done.get() && !disconnected) {
             Thread.sleep(math.min(math.max(debounceMs / 2, 10L), 200L))
-            val snap = snapshot()
+            // the memory table changes only when a micro-batch commits, so
+            // it is read (a Spark job) only after a new one has
+            val batch = Option(sq.lastProgress).fold(-1L)(_.batchId)
+            val snap = if (batch > lastBatch) { lastBatch = batch; snapshot() } else Nil
             val key = snap.mkString("")
             try {
               if (snap.nonEmpty && key != lastKey) {
@@ -442,6 +470,9 @@ final class QueryServer(
 
 object QueryServer {
   private val ids = new AtomicLong(0L)
+  private val GroupPrefix = "graft-query-"
+  // SparkContext.SPARK_JOB_GROUP_ID, which is private[spark]
+  private val JobGroupKey = "spark.jobGroup.id"
 
   /** Recursive step predicate over the main query, lets, and join/union
     * subqueries.

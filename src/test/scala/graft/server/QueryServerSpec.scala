@@ -4,7 +4,7 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
   SparkListenerTaskEnd, SparkListenerTaskStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSortedCollect, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.kql.{Catalog, Kql}
@@ -303,19 +303,28 @@ class QueryServerSpec extends AnyFunSuite {
   }
 
   /** Sends `kql` over a raw socket, waits until its jobs run, closes the
-    * socket and asserts that every job and every task ends soon after. */
-  private def assertDisconnectCancels(kql: String): Unit = {
+    * socket and asserts that every job and every task ends soon after.
+    * With a `statusDir`, the request's status record must end `canceled`
+    * with an end time. */
+  private def assertDisconnectCancels(kql: String, statusDir: Option[String] = None): Unit = {
     val cat = Catalog.forTestData(spark, graft.TestSpark.sf)
     // a query that takes several seconds on 4 local cores: full scan of a
     // wide synthetic range with a hash per row
     cat.register("slow",
       spark.range(0L, 12000000000L, 1L, 8)
         .selectExpr("hash(id) AS h"))
-    val srv = QueryServer.start(spark, cat)
+    val srv = QueryServer.start(spark, cat, statusDir = statusDir)
     // task ids, so an end whose start reached the bus before this
     // listener joined cannot make the count negative
     val running = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    // a server job over all 8 `slow` partitions has started: the status
+    // record's own upserts are server jobs too, but small ones
+    val scanning = new java.util.concurrent.atomic.AtomicBoolean(false)
     val tasks = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+            .exists(_.startsWith("graft-query-")) && e.stageInfos.exists(_.numTasks == 8))
+          scanning.set(true)
       override def onTaskStart(e: SparkListenerTaskStart): Unit = running.add(e.taskInfo.taskId)
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit = running.remove(e.taskInfo.taskId)
     }
@@ -329,9 +338,9 @@ class QueryServerSpec extends AnyFunSuite {
       // wait until the job is actually running, then vanish
       val tracker = spark.sparkContext.statusTracker
       val t0 = System.currentTimeMillis()
-      while (tracker.getActiveJobIds().isEmpty && System.currentTimeMillis() - t0 < 10000)
+      while (!scanning.get() && System.currentTimeMillis() - t0 < 10000)
         Thread.sleep(50)
-      assert(tracker.getActiveJobIds().nonEmpty, "slow query never started")
+      assert(scanning.get(), "slow query never started")
       sock.close()
       // the keepalive probe should hit the broken pipe and cancel the group;
       // a cancelled job is inactive at once, so also wait for its tasks:
@@ -345,6 +354,17 @@ class QueryServerSpec extends AnyFunSuite {
         s"jobs still active ${System.currentTimeMillis() - t1}ms after disconnect: ${lingering.mkString(",")}")
       assert(running.isEmpty,
         s"${running.size} tasks still running ${System.currentTimeMillis() - t1}ms after disconnect")
+      statusDir.foreach { dir =>
+        // the handler closes the record after its cancelled jobs end
+        def record = graft.sources.Sinks.readUpserted(spark, dir)
+          .where(s"${QueryStatus.StatusField} != 'running'").collect()
+        val t2 = System.currentTimeMillis()
+        while (record.isEmpty && System.currentTimeMillis() - t2 < 10000) Thread.sleep(100)
+        val rows = record
+        assert(rows.length == 1, "the status record never closed")
+        assert(rows.head.getAs[String](QueryStatus.StatusField) == "canceled")
+        assert(rows.head.getAs[java.sql.Timestamp](QueryStatus.EndTimeField) != null)
+      }
     } finally {
       spark.sparkContext.removeSparkListener(tasks)
       srv.stop()
@@ -359,6 +379,13 @@ class QueryServerSpec extends AnyFunSuite {
     // the sorted path holds the whole result before its first row, so
     // only the keepalive probe can notice the client has gone
     assertDisconnectCancels("slow | summarize s = sum(h) by b = h % 7 | sort by b")
+  }
+
+  test("a disconnected sorted query's status record ends canceled") {
+    // the cancel also refuses the group's later jobs: the record's closing
+    // upsert must not run in that group
+    val dir = java.nio.file.Files.createTempDirectory("graft_status").resolve("s").toString
+    assertDisconnectCancels("slow | summarize s = sum(h) by b = h % 7 | sort by b", Some(dir))
   }
 
   test("stop() terminates the handler pool's threads") {
@@ -481,6 +508,20 @@ class QueryServerSpec extends AnyFunSuite {
       while (ok() < before + texts.size && System.currentTimeMillis() - t0 < 10000) Thread.sleep(100)
       Thread.sleep(500)
       assert(ok() == before + texts.size)
+    }
+  }
+
+  test("a sorted result over the merge cap is left to the streamed global sort") {
+    for (aqe <- Seq(false, true)) withSplitServer(aqe) { (_, s, cat) =>
+      withClue(s"aqe=$aqe: ") {
+        val df = Kql.run(s, cat, "split4 | sort by k desc")
+        val want = df.toJSON.collect().toSeq
+        assert(GraftSortedCollect.sortedJson(df).map(_.toSeq).contains(want))
+        // 400 rows of 5 columns pass a 1 kB cap: the caller streams df
+        assert(GraftSortedCollect.sortedJson(df, maxBytes = 1024).isEmpty)
+        // a root that is not a sort is never merged
+        assert(GraftSortedCollect.sortedJson(Kql.run(s, cat, "split4 | take 3")).isEmpty)
+      }
     }
   }
 
